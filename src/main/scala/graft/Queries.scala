@@ -2526,21 +2526,18 @@ object Queries {
     // independent — overlapping them as concurrent driver jobs cuts the
     // query's build latency to ~the slowest call (r16 optimization;
     // identical rows, same union order)
-    val parts = new Array[DataFrame](3)
-    graft.util.Concurrency.runConcurrently(0 until 3) {
-      case 0 => parts(0) = k.compositeInclusionDependencies(li, ord, Seq(
+    val lineKey = Seq(Seq("l_orderkey", "l_linenumber") ->
+      Seq("l_orderkey", "l_linenumber"))
+    graft.util.Concurrency.runConcurrently(Seq(
+      (li, ord, Seq(
         Seq("l_orderkey", "l_linestatus") ->
           Seq("o_orderkey", "o_orderstatus"),
         Seq("l_orderkey") -> Seq("o_orderkey"),
-        Seq("l_orderkey", "l_suppkey") -> Seq("o_orderkey", "o_custkey")))
-      case 1 => parts(1) = k.compositeInclusionDependencies(liSlice, li,
-        Seq(Seq("l_orderkey", "l_linenumber") ->
-          Seq("l_orderkey", "l_linenumber")))
-      case _ => parts(2) = k.compositeInclusionDependencies(li, liSlice,
-        Seq(Seq("l_orderkey", "l_linenumber") ->
-          Seq("l_orderkey", "l_linenumber")))
-    }
-    parts.reduce(_ unionAll _)
+        Seq("l_orderkey", "l_suppkey") -> Seq("o_orderkey", "o_custkey"))),
+      (liSlice, li, lineKey),
+      (li, liSlice, lineKey))) { case (l, r, pairs) =>
+      k.compositeInclusionDependencies(l, r, pairs)
+    }.reduce(_ unionAll _)
       .orderBy("left_columns", "right_columns", "n_missing")
   }
 
@@ -2675,17 +2672,14 @@ object Queries {
     // independent — overlapping them end-to-end (the q149 idiom) undoes
     // the r16 regression where each call's internal fan-out ran in its
     // own serial phase (identical rows, same union order)
-    val parts = new Array[DataFrame](3)
-    graft.util.Concurrency.runConcurrently(0 until 3) {
-      case 0 => parts(0) = k.orderDependencies(table(s, dir, "events"),
-        Seq("event_id" -> "ts", "event_id" -> "value",
-          "user_id" -> "value"))
-      case 1 => parts(1) = k.orderDependencies(table(s, dir, "orders"),
-        Seq("o_orderkey" -> "o_orderdate", "o_custkey" -> "o_totalprice"))
-      case _ => parts(2) = k.orderDependencies(table(s, dir, "documents"),
-        Seq("doc_id" -> "n_chars"))
-    }
-    parts.reduce(_ unionAll _)
+    graft.util.Concurrency.runConcurrently(Seq(
+      "events" -> Seq("event_id" -> "ts", "event_id" -> "value",
+        "user_id" -> "value"),
+      "orders" -> Seq("o_orderkey" -> "o_orderdate",
+        "o_custkey" -> "o_totalprice"),
+      "documents" -> Seq("doc_id" -> "n_chars"))) { case (t, pairs) =>
+      k.orderDependencies(table(s, dir, t), pairs)
+    }.reduce(_ unionAll _)
       .orderBy("on_column", "ordered_column")
   }
 

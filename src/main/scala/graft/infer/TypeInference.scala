@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.config.WwConfig
 import graft.types.{ColStats, LogicalType, TypeSystem}
+import graft.util.Concurrency.runConcurrently
 
 /** Distributed logical-type inference.
   *
@@ -185,9 +186,6 @@ object TypeInference {
     stats
   }
 
-  private def runConcurrently[A](items: Seq[A])(work: A => Unit): Unit =
-    graft.util.Concurrency.runConcurrently(items)(work)
-
   /** Returns the stats, the (cached) sample frame for follow-up jobs (the NL
     * pass reuses it), and a cleanup thunk that releases ONLY the cache this
     * call created — when no sampling occurred and the caller had already
@@ -218,13 +216,10 @@ object TypeInference {
     // function whose Janino compile costs more than the sample scan itself;
     // per-column plans compile in parallel on the job-submitter threads and
     // each re-scan hits the in-memory bounded sample.
-    val rows = new Array[Row](fields.length)
-    runConcurrently(fields.indices) { i =>
-      val f = fields(i)
-      rows(i) = sampled.agg(statExprs(f.name, f.dataType)).head()
-    }
-    (fields.zipWithIndex.map { case (f, i) =>
-      f.name -> rowToStats(rows(i), 0, f.dataType)
+    val rows = runConcurrently(fields.toSeq)(f =>
+      sampled.agg(statExprs(f.name, f.dataType)).head())
+    (fields.zip(rows).map { case (f, r) =>
+      f.name -> rowToStats(r, 0, f.dataType)
     }.toMap, sampled, cleanup)
   }
 

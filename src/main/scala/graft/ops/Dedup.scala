@@ -271,6 +271,10 @@ object Dedup {
     * through hub documents); `maxIter` bounds adversarial chains. Lineage
     * is truncated per round (localCheckpoint) so the iterative plan cannot
     * grow without bound; the result is EAGER like the other pair ops.
+    * Every materialization the call makes is released as soon as a later
+    * one supersedes it: the driver-side path returns driver values and
+    * leaves nothing persisted, the distributed path leaves only the
+    * returned labels.
     */
   def duplicateClusters(pairs: DataFrame, idCol1: String = "id_1",
                         idCol2: String = "id_2",
@@ -311,6 +315,7 @@ object Dedup {
         }
         parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
       }
+      release(e0)
       val ids = head.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
       val spark = pairs.sparkSession
       import spark.implicits._
@@ -319,6 +324,7 @@ object Dedup {
     }
     val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint(eager = true)
+    release(e0)
     // round 0: every node takes min(self, smallest direct neighbor)
     var labels = edges.groupBy(col("a").as("id"))
       .agg(min(col("b")).as("nbr"))
@@ -338,11 +344,26 @@ object Dedup {
           col("label").as("prev"))
         .localCheckpoint(eager = true)
       changed = next.where(col("label") =!= col("prev")).count()
+      release(labels)
       labels = next.drop("prev")
       iter += 1
     }
+    release(edges)
     labels.select(col("id"), col("label").as("cluster_id"))
   }
+
+  /** Drops the blocks behind a local checkpoint the caller no longer
+    * reads: a checkpointed frame's plan is a `LogicalRDD` over the
+    * persisted RDD, which otherwise outlives the call until the
+    * ContextCleaner collects it. The removal blocks, so it completes
+    * inside the call instead of overlapping the caller's next jobs.
+    */
+  private[graft] def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = true)
+      case _ =>
+    }
 
   /** Text-level cross-corpus decontamination: corpus documents that
     * NEAR-DUPLICATE any benchmark document — the MinHash sibling of the

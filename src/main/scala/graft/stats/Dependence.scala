@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.frame.WoodworkFrame
+import graft.util.Concurrency.runConcurrently
 
 /** Pairwise column dependence: Pearson, Spearman, adjusted mutual information,
   * and their signed max (reference: `df.ww.dependence`,
@@ -110,13 +111,6 @@ object Dependence {
         (col("__cumLess") + offExpr + (col("__c") + 1) / 2.0).as("__avg_rank"))
     (table, () => { counts.unpersist(); () })
   }
-
-  /** Run per-pair Spark jobs concurrently from the driver (Spark schedules
-    * concurrent jobs fine; each job is independent and writes to its own
-    * PairResult). Latency of k² small jobs drops from sum to ~max.
-    */
-  private def parallelJobs[A](items: Seq[A])(work: A => Unit): Unit =
-    graft.util.Concurrency.runConcurrently(items)(work)
 
   /** Named single-measure variants (reference API surface:
     * table_accessor.py:881-1433 `mutual_information`, `pearson_correlation`,
@@ -298,16 +292,8 @@ object Dependence {
       // the declarative groups — never the same agg (codegen, above)
       val groups: Seq[Seq[Column]] =
         if (nunAggs.isEmpty) declGroups else declGroups :+ nunAggs
-      val r1s: Seq[Row] = {
-        val out = new Array[Row](groups.length)
-        if (groups.size == 1)
-          out(0) = prep.agg(groups.head.head, groups.head.tail: _*).head()
-        else parallelJobs(groups.indices) { i =>
-          val as = groups(i)
-          out(i) = prep.agg(as.head, as.tail: _*).head()
-        }
-        out.toIndexedSeq
-      }
+      val r1s: Seq[Row] =
+        runConcurrently(groups)(as => prep.agg(as.head, as.tail: _*).head())
       val fieldOf: Map[String, (Row, Int)] = r1s.flatMap(r =>
         r.schema.fieldNames.zipWithIndex.map { case (f, i) => f -> (r, i) })
         .toMap
@@ -364,13 +350,8 @@ object Dependence {
             nullFree.exists(r => r.col1 == n || r.col2 == n))
           // each rank table runs a small driver-side action; build them
           // concurrently so k tables cost ~one table of wall-clock
-          val rankTables = {
-            val arr = new Array[(String, (DataFrame, () => Unit))](rankedCols.size)
-            parallelJobs(rankedCols.zipWithIndex) { case (n, i) =>
-              arr(i) = n -> avgRankTable(prep, n, Some(nunique(n)))
-            }
-            arr.toSeq
-          }
+          val rankTables = runConcurrently(rankedCols)(n =>
+            n -> avgRankTable(prep, n, Some(nunique(n))))
           try {
             // join each rank table back by value; tables up to ~2M rows
             // (known from the pass-1 nunique) broadcast — a rank-table row
@@ -397,7 +378,7 @@ object Dependence {
             }
           } finally rankTables.foreach(_._2._2())
         }
-        parallelJobs(withNulls) { r =>
+        runConcurrently(withNulls) { r =>
           // ranks on the pair's shared rows, same distributed rank shape
           val sub = prep.select(col(r.col1), col(r.col2))
             .where(col(r.col1).isNotNull && col(r.col2).isNotNull)
@@ -456,7 +437,7 @@ object Dependence {
         }
         val miPairs = results.filter(r => !dropped(r.col1) && !dropped(r.col2) &&
           r.sharedRows >= minShared)
-        parallelJobs(miPairs) { r =>
+        runConcurrently(miPairs) { r =>
           val ct = binned
             .where(col(s"bin__${r.col1}").isNotNull && col(s"bin__${r.col2}").isNotNull)
             .groupBy(s"bin__${r.col1}", s"bin__${r.col2}")
@@ -614,10 +595,13 @@ object Ami {
     // r17 per-task-work pass (guide §1.2 step 2): every lgamma argument in
     // the Vinh sum is an INTEGER (+1) bounded by n+1, so for modest n a
     // lookup table of lgamma at integer points replaces ~9 transcendental
-    // evaluations per term with array reads — bit-identical values (same
-    // lgamma, same double arguments), measured ~10x on the 10x10/150k-row
-    // fixture shape. Above the memory cap the five (i,j)-invariant calls
-    // are still hoisted out of the innermost loop (~2x).
+    // evaluations per term with array reads (same lgamma at the same
+    // double arguments), measured ~10x on the 10x10/150k-row fixture
+    // shape. Above the memory cap the five (i,j)-invariant calls are still
+    // hoisted out of the innermost loop (~2x). The hoisting regroups the
+    // sums, so logTerm and logHyper may differ from the unhoisted
+    // expression in the last bits: values agree to rounding, not bit for
+    // bit.
     val tableMax = 1L << 23 // 8M doubles = 64 MB driver ceiling
     val lg: Long => Double =
       if (nL + 1 <= tableMax) {

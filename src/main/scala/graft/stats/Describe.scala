@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.frame.WoodworkFrame
 import graft.types.LogicalType
+import graft.util.Concurrency.runConcurrently
 
 /** Distributed column profiling (reference: `df.ww.describe`,
   * woodwork/table_accessor.py:1454-1567; engine
@@ -52,15 +53,11 @@ object Describe {
     */
   private def batchedStructAgg(df: DataFrame,
                                items: Seq[(String, Column)]): Map[String, Row] = {
-    if (items.isEmpty) return Map.empty
-    val out = new java.util.concurrent.ConcurrentHashMap[String, Row]()
     runConcurrently(items.grouped(StatBatchSize).toSeq) { batch =>
       val exprs = batch.map(_._2)
       val r = df.agg(exprs.head, exprs.tail: _*).head()
-      batch.zipWithIndex.foreach { case ((n, _), i) => out.put(n, r.getStruct(i)) }
-    }
-    import scala.jdk.CollectionConverters._
-    out.asScala.toMap
+      batch.zipWithIndex.map { case ((n, _), i) => n -> r.getStruct(i) }
+    }.flatten.toMap
   }
 
   /** Reference-parity table profile (`describe`, _get_describe_dict.py).
@@ -220,9 +217,6 @@ object Describe {
     (r._1, r._2)
   }
 
-  private def runConcurrently[A](items: Seq[A])(work: A => Unit): Unit =
-    graft.util.Concurrency.runConcurrently(items)(work)
-
   /** Buckets per region and level of the exact-quantile histogram walk:
     * regions·4096 groups per agg keeps the shuffle a few KB while shrinking
     * region width ~4096× per level.
@@ -275,17 +269,14 @@ object Describe {
         }
       }
     val all = stats ++ computed
-    val out = new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
     runConcurrently(targets.toSeq) { case (n, ps) =>
       val (cnt, mn, mx) = all(n)
-      if (cnt > 0) {
+      Option.when(cnt > 0) {
         val v = col(n).cast(DoubleType)
-        out.put(n, bisectColumn(
-          df.select(v.as("v")).where(v.isNotNull), ps, cnt, mn, mx))
+        n -> bisectColumn(
+          df.select(v.as("v")).where(v.isNotNull), ps, cnt, mn, mx)
       }
-    }
-    import scala.jdk.CollectionConverters._
-    out.asScala.toMap
+    }.flatten.toMap
   }
 
   /** PER-GROUP exact quantiles — "median by category" at scale: for each
@@ -551,11 +542,9 @@ object Describe {
     if (cols.isEmpty) return (Map.empty, Map.empty, Map.empty)
     val numish = cols.filter(n => targets.contains(n) || numericCols.contains(n)).toSet
     val integral = numish.filter(n => LogicalType.isIntegralType(df.schema(n).dataType))
-    val modes = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val nuniques = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val quartiles = new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
-
-    runConcurrently(cols) { n =>
+    // per column: (nunique, mode, quartiles) — absent for an all-null
+    // column, and a null mode or quartile stays out of its map
+    val perCol = runConcurrently(cols) { n =>
       val isNum = numish(n)
       val v = if (isNum) col(n).cast(DoubleType) else col(n).cast(StringType)
       val base = df.select(v.as("v")).where(col("v").isNotNull)
@@ -566,8 +555,7 @@ object Describe {
           min(col("v")).as("mn"), max(col("v")).as("mx"))
         .head()
       val nu = top.getLong(1)
-      if (nu > 0) {
-        nuniques.put(n, nu)
+      Option.when(nu > 0) {
         val t = top.getStruct(0)
         val modeStr =
           if (!isNum) t.getString(1)
@@ -575,16 +563,14 @@ object Describe {
             val d = t.getDouble(1)
             if (integral(n)) d.toLong.toString else d.toString
           }
-        if (modeStr != null) modes.put(n, modeStr)
-
-        targets.get(n).foreach { ps =>
-          quartiles.put(n, bisectColumn(base, ps,
-            top.getLong(2), top.getDouble(3), top.getDouble(4)))
-        }
+        (nu, Option(modeStr), targets.get(n).map(ps => bisectColumn(base, ps,
+          top.getLong(2), top.getDouble(3), top.getDouble(4))))
       }
     }
-    import scala.jdk.CollectionConverters._
-    (modes.asScala.toMap, nuniques.asScala.toMap, quartiles.asScala.toMap)
+    val found = cols.zip(perCol).collect { case (n, Some(r)) => n -> r }
+    (found.flatMap { case (n, r) => r._2.map(n -> _) }.toMap,
+      found.map { case (n, r) => n -> r._1 }.toMap,
+      found.flatMap { case (n, r) => r._3.map(n -> _) }.toMap)
   }
 
   /** Equal-width histogram of a numeric column in `bins` buckets
@@ -672,36 +658,29 @@ object Describe {
       }
     }
 
-    val hist = new java.util.concurrent.ConcurrentHashMap[String, Seq[Row]]()
-    val tops = new java.util.concurrent.ConcurrentHashMap[String, Seq[Row]]()
-    val recents = new java.util.concurrent.ConcurrentHashMap[String, Seq[Row]]()
-    runConcurrently(cols) { case (n, cs) =>
+    def counted(d: DataFrame): Seq[Row] =
+      d.select(col("value").cast(StringType), col("count")).collect().toSeq
+    // per column: Row(name, histogram, top_values, recent_values), an
+    // absent extra as null
+    val extraRows = runConcurrently(cols) { case (n, cs) =>
       if (cs.isNumeric) numInfo(n) match {
         case (Some(lo), Some(hi), _, nonIntegral) =>
-          hist.put(n, histogram(df, n, bins).collect().toSeq)
           val rangeLen = hi.toLong + 1 - lo.toLong
-          if (intFamily.contains(cs.logicalType.name) && rangeLen <= bins &&
-              nonIntegral == 0)
-            tops.put(n, numericValueCountsInRange(df, n, bins)
-              .select(col("value").cast(StringType), col("count"))
-              .collect().toSeq)
-        case _ => hist.put(n, Seq.empty) // all-null numeric → empty histogram
+          Row(n, histogram(df, n, bins).collect().toSeq,
+            if (intFamily.contains(cs.logicalType.name) && rangeLen <= bins &&
+                nonIntegral == 0)
+              counted(numericValueCountsInRange(df, n, bins))
+            else null, null)
+        case _ => Row(n, Seq.empty, null, null) // all-null numeric → empty histogram
       }
       else if (cs.isCategorical)
-        tops.put(n, ValueCounts.topValues(df, n, topX)
-          .select(col("value").cast(StringType), col("count"))
-          .collect().toSeq)
+        Row(n, null, counted(ValueCounts.topValues(df, n, topX)), null)
       else if (cs.isDatetime)
-        recents.put(n, recentValueCounts(df, n, recentX)
-          .select(col("value").cast(StringType), col("count"))
-          .collect().toSeq)
+        Row(n, null, null, counted(recentValueCounts(df, n, recentX)))
+      else Row(n, null, null, null)
     }
 
     val spark = df.sparkSession
-    val extraRows = cols.map { case (n, _) =>
-      Row(n, Option(hist.get(n)).orNull, Option(tops.get(n)).orNull,
-        Option(recents.get(n)).orNull)
-    }
     val extraSchema = StructType(Seq(
       StructField("column_name", StringType),
       StructField("histogram", HistEntry),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Concurrency.runConcurrently
+
 /** Schema discovery beyond declared typing: candidate-key detection and
   * functional-dependency profiling — the automated version of the
   * uniqueness check the reference runs when an index is DECLARED
@@ -17,15 +19,11 @@ import org.apache.spark.sql.types._
   * full-width scan) with map-side partial distinct collapsing
   * low-cardinality tuples BEFORE the shuffle. Measured 3–7× faster than
   * the alternative one-scan multi-distinct aggregate on the q139
-  * lattice (ProbeQ139): Spark plans that shape as one Expand shuffling
-  * k+1 copies of every scanned row regardless of cardinality — the same
-  * melt-vs-jobs result [[columnEntropy]] measured first. The Expand
-  * shape remains available as `scanOnce = true` for scan-bound clusters
-  * (a 100 TB table whose candidate columns dominate its width reads k×
-  * the bytes under concurrent jobs but only once under Expand — trade
-  * measured shuffle savings against scan amplification there). The FD
+  * lattice: Spark plans that shape as one Expand shuffling k+1 copies
+  * of every scanned row regardless of cardinality — the same
+  * melt-vs-jobs result [[columnEntropy]] measured first. The FD
   * profile follows the same pattern — per-pair jobs measured 2.7×
-  * faster than the batched 2k²-group Expand on the q129 shape (ProbeFd)
+  * faster than the batched 2k²-group Expand on the q129 shape
   * even though pairs re-read shared columns, because each pair's
   * map-side partial distinct collapses before the shuffle. Driver state
   * is candidate-list-sized (k rows / k² pair rows), never data-sized.
@@ -87,13 +85,31 @@ object KeyDiscovery {
     */
   val AutoScreenBytes: Long = 256L << 20
 
-  private def useHll(df: DataFrame, screen: Screen): Boolean = screen match {
-    case Screen.Exact => false
-    case Screen.Hll   => true
-    case Screen.Auto  =>
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(AutoScreenBytes)
-  }
+  /** Resolves `screen` for one call over `frames`: under `Auto`, the
+    * LARGEST frame's optimizer scan estimate against [[AutoScreenBytes]]
+    * (for an IND, either side large enough makes the exact distinct
+    * shuffle worth screening away).
+    */
+  private def useHll(screen: Screen, frames: DataFrame*): Boolean =
+    screen match {
+      case Screen.Exact => false
+      case Screen.Hll   => true
+      case Screen.Auto  =>
+        frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
+          .max >= BigInt(AutoScreenBytes)
+    }
+
+  private def requireRsd(rsd: Double): Unit =
+    require(rsd > 0 && rsd < 0.2, s"need 0 < rsd < 0.2, got $rsd")
+
+  /** The schema of a driver-side verdict table: every column is
+    * non-nullable. */
+  private def schema(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  private def localFrame(spark: SparkSession, rows: Seq[Row],
+                         schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
   /** Candidate-key profile for the given columns: exact distinct count,
     * null count, and whether the column uniquely identifies rows
@@ -110,19 +126,13 @@ object KeyDiscovery {
         "fan-out — profile in staged batches")
     cols.foreach(c => require(df.columns.contains(c),
       s"candidate column '$c' not in frame"))
-    val profiles = profileTuples(df, cols.map(Seq(_)))
-    val rows = cols.zip(profiles).map { case (c, (n, d, z)) =>
+    val (profiles, _) = measure(cols.size)(i => tupleProfile(df, Seq(cols(i))))
+    val rows = cols.zip(profiles).map { case (c, ((n, d, z), _)) =>
       Row(c, n, d, z, z == 0L && d == n)
     }
-    val spark = df.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("column_name", StringType, nullable = false),
-        StructField("n_rows", LongType, nullable = false),
-        StructField("n_distinct", LongType, nullable = false),
-        StructField("n_null", LongType, nullable = false),
-        StructField("is_key", BooleanType, nullable = false))))
+    localFrame(df.sparkSession, rows, schema("column_name" -> StringType,
+      "n_rows" -> LongType, "n_distinct" -> LongType, "n_null" -> LongType,
+      "is_key" -> BooleanType))
   }
 
   /** Composite candidate-key profile: like [[candidateKeys]] but over
@@ -135,16 +145,15 @@ object KeyDiscovery {
     * index contract lifted to composites).
     *
     * Each candidate measures in its own narrow CONCURRENT job (see the
-    * object doc for the measured jobs-vs-Expand tradeoff; `scanOnce =
-    * true` selects the one-scan batched aggregation instead, and
-    * `screen` the HLL screen-then-confirm path — the object doc states
+    * object doc for the measured jobs-vs-Expand tradeoff; `screen`
+    * selects the HLL screen-then-confirm path — the object doc states
     * its error bound; `is_exact` marks per row whether its counts are
     * exact or sketch estimates). The scale knob is the candidate count:
-    * `MaxCandidates` bounds one call (concurrent driver-job fan-out, or
-    * Expand row copies under `scanOnce`); search a wide lattice in
-    * staged batches — run arity 1 first and drop every tuple containing
-    * a discovered key (supersets of a key are trivially keys), the
-    * TANE-style prune [[discoverKeysStaged]] automates.
+    * `MaxCandidates` bounds one call's concurrent driver-job fan-out;
+    * search a wide lattice in staged batches — run arity 1 first and
+    * drop every tuple containing a discovered key (supersets of a key
+    * are trivially keys), the TANE-style prune [[discoverKeysStaged]]
+    * automates.
     *
     * Output: (key_columns comma-joined, arity, n_rows, n_distinct,
     * n_null_rows, is_key, is_exact), one row per candidate in the given
@@ -152,24 +161,12 @@ object KeyDiscovery {
     */
   def compositeCandidateKeys(df: DataFrame,
                              candidates: Seq[Seq[String]],
-                             scanOnce: Boolean = false,
                              screen: Screen = Screen.Exact,
                              screenRsd: Double = 0.02): DataFrame = {
-    require(!(scanOnce && screen == Screen.Hll),
-      "scanOnce and the HLL screen are alternative plans — pick one")
-    // an explicit scanOnce wins over Auto: the guard must stay a static
-    // API contract, never a data-size-triggered runtime failure
-    val hll = !scanOnce && useHll(df, screen)
+    val hll = useHll(screen, df)
     validateCandidates(df, candidates)
-    val profiles: Seq[((Long, Long, Long), Boolean)] =
-      if (scanOnce) {
-        val r = compositeKeyAgg(df, candidates).head()
-        val n = r.getLong(0)
-        candidates.indices.map(i =>
-          ((n, r.getLong(1 + 2 * i), r.getLong(2 + 2 * i)), true))
-      } else if (hll) profileTuplesScreened(df, candidates, screenRsd)._1
-      else profileTuples(df, candidates).map((_, true))
-    compositeResult(df.sparkSession, candidates.zip(profiles))
+    compositeResult(df.sparkSession,
+      candidates.zip(keyProfiles(df, candidates, hll, screenRsd)))
   }
 
   private def validateCandidates(df: DataFrame,
@@ -192,31 +189,23 @@ object KeyDiscovery {
     * row carries exact counts (r10 ADVICE — the convention is now a
     * schema-level fact, not a scaladoc warning).
     */
-  private val compositeSchema = StructType(Seq(
-    StructField("key_columns", StringType, nullable = false),
-    StructField("arity", IntegerType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false),
-    StructField("n_null_rows", LongType, nullable = false),
-    StructField("is_key", BooleanType, nullable = false),
-    StructField("is_exact", BooleanType, nullable = false)))
-
   private def compositeResult(spark: SparkSession,
       profiled: Seq[(Seq[String], ((Long, Long, Long), Boolean))]): DataFrame = {
     val rows = profiled.map { case (cs, ((n, d, z), exact)) =>
       Row(cs.mkString(","), cs.size, n, d, z, z == 0L && d == n, exact)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-      compositeSchema)
+    localFrame(spark, rows, schema("key_columns" -> StringType,
+      "arity" -> IntegerType, "n_rows" -> LongType, "n_distinct" -> LongType,
+      "n_null_rows" -> LongType, "is_key" -> BooleanType,
+      "is_exact" -> BooleanType))
   }
 
   /** Per-call measure budget shared by [[candidateKeys]],
     * [[compositeCandidateKeys]] and [[functionalDependencies]]: k
-    * concurrent jobs each scan the table (pruned), and the `scanOnce`
-    * Expand replicates the scanned rows once per distinct group — either
-    * way cost is measures × scan, so one call is bounded and wider
-    * lattices profile in staged batches. 64 keeps one call under the
-    * all-pairs profile of an 11-column table.
+    * concurrent jobs each scan the table (pruned), so cost is
+    * measures × scan; one call is bounded and wider lattices profile in
+    * staged batches. 64 keeps one call under the all-pairs profile of an
+    * 11-column table.
     */
   val MaxCandidates = 64
 
@@ -262,6 +251,48 @@ object KeyDiscovery {
     }.sortBy(_.map(idx))
   }
 
+  /** The one lattice walk (TANE, Huhtala et al. 1999) behind
+    * [[discoverKeysStaged]], [[approximateKeys]],
+    * [[compositeFunctionalDependencies]] and
+    * [[approximateFunctionalDependencies]]. Per target `t` (the dependent
+    * of an FD walk; the single `()` of a key walk), level 1 is every
+    * column `x` of `cols` with `first(x, t)`, and each higher level is
+    * generated Apriori-style ([[aprioriNextLevel]]) from the target's
+    * previous-level SURVIVORS — measured candidates whose measure does
+    * not `hold`. A holding set therefore never generates a superset,
+    * which IS the prune. Each level measures in [[MaxCandidates]]-bounded
+    * chunks (`measureChunk` returns one measure per candidate, in chunk
+    * order), so a wide lattice never exceeds the per-call budget.
+    *
+    * Returns every measured candidate with its measure in lattice order:
+    * levels ascending, each level by (column-index tuple, target index).
+    */
+  private def latticeWalk[T, M](cols: Seq[String], targets: Seq[T],
+      maxArity: Int)(first: (String, T) => Boolean)(
+      measureChunk: Seq[(Seq[String], T)] => Seq[M])(
+      holds: M => Boolean): Seq[((Seq[String], T), M)] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val idx = cols.zipWithIndex.toMap
+    val tIdx = targets.zipWithIndex.toMap
+    val out = Seq.newBuilder[((Seq[String], T), M)]
+    var survivors = Map.empty[T, Seq[Seq[String]]]
+    for (a <- 1 to maxArity) {
+      val level =
+        if (a == 1) for (x <- cols; t <- targets if first(x, t)) yield (Seq(x), t)
+        else targets.flatMap(t =>
+            aprioriNextLevel(survivors.getOrElse(t, Nil), idx).map((_, t)))
+          .sortBy { case (xs, t) => (xs.map(idx), tIdx(t)) }
+      // per-level collect is bounded: level measures are candidate-sized
+      // driver values (never data-sized), and verdicts gate the next level
+      val measured = level.grouped(MaxCandidates)
+        .flatMap(chunk => chunk.zip(measureChunk(chunk))).toSeq
+      out ++= measured
+      survivors = measured.filterNot(m => holds(m._2))
+        .groupMap(_._1._2)(_._1._1)
+    }
+    out.result()
+  }
+
   /** Arity-STAGED key search with TANE-style pruning (Huhtala et al.
     * 1999's lattice walk, restricted to key discovery): profile arity 1,
     * then at each higher arity measure only tuples that contain NO
@@ -274,9 +305,9 @@ object KeyDiscovery {
     * minimal", not "implied key". Null-free added columns restore the
     * trivially-a-key reading.) This is the
     * operational form of the staged-batch guidance in the object doc:
-    * each arity level measures in [[MaxCandidates]]-bounded chunks, so a
-    * wide lattice never exceeds the per-call budget and the prune
-    * shrinks level k+1 by every key level k found (on a table whose
+    * [[latticeWalk]] measures each arity level in [[MaxCandidates]]-bounded
+    * chunks, so a wide lattice never exceeds the per-call budget and the
+    * prune shrinks level k+1 by every key level k found (on a table whose
     * single-column id is a key, arity 2 over n columns measures
     * C(n−1, 2) tuples instead of C(n, 2)). Levels generate
     * Apriori-style from the previous level's non-key survivors
@@ -301,79 +332,44 @@ object KeyDiscovery {
                          screenRsd: Double = 0.02): DataFrame = {
     require(maxArity >= 1, s"need maxArity >= 1, got $maxArity")
     require(cols.nonEmpty, "need at least one column")
-    val hll = useHll(df, screen)
-    val idx = cols.zipWithIndex.toMap
-    val profiled = scala.collection.mutable.ArrayBuffer
-      .empty[(Seq[String], ((Long, Long, Long), Boolean))]
-    // survivors of the previous level: measured and NOT keys — Apriori
-    // generation joins them instead of enumerating the full lattice
-    var survivors: Seq[Seq[String]] = Nil
-    for (a <- 1 to maxArity if a == 1 || survivors.nonEmpty) {
-      val level: Seq[Seq[String]] =
-        if (a == 1) cols.map(Seq(_)) else aprioriNextLevel(survivors, idx)
-      val next = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-      // per-level collect is bounded: level profiles are candidate-sized
-      // driver values (never data-sized), and verdicts gate the next level
-      level.grouped(MaxCandidates).foreach { chunk =>
-        validateCandidates(df, chunk)
-        val profiles =
-          if (hll) profileTuplesScreened(df, chunk, screenRsd)._1
-          else profileTuples(df, chunk).map((_, true))
-        chunk.zip(profiles).foreach { case (cs, p @ ((n, d, z), _)) =>
-          profiled += ((cs, p))
-          if (!(z == 0L && d == n)) next += cs
-        }
-      }
-      survivors = next.toSeq
-    }
-    compositeResult(df.sparkSession, profiled.toSeq)
+    val hll = useHll(screen, df)
+    val walked = latticeWalk(cols, Seq(()), maxArity)((_, _) => true) { chunk =>
+      val cands = chunk.map(_._1)
+      validateCandidates(df, cands)
+      keyProfiles(df, cands, hll, screenRsd)
+    } { case ((n, d, z), _) => z == 0L && d == n }
+    compositeResult(df.sparkSession,
+      walked.map { case ((cs, _), p) => (cs, p) })
   }
 
-  /** The concurrent per-candidate profile path: one narrow aggregation
-    * per tuple, driven through a bounded thread pool so the k jobs
-    * overlap in the scheduler; results land indexed so output order is
-    * the caller's candidate order regardless of completion order.
+  /** The one measurement step every measure in this object shares: a
+    * driver-side `refuted` test over readings an optional sketch screen
+    * already took (`Some` = the candidate's sketch-estimate profile, so
+    * it skips its exact job), then concurrent EXACT jobs for the
+    * survivors in [[MaxCandidates]]-bounded chunks. With no screen every
+    * candidate pays its exact job. Returns (profile, isExact) per
+    * candidate in input order, plus the number of exact jobs actually
+    * paid — the spec/probe hook for "how many exact shuffles did the
+    * screen save".
     */
-  private def profileTuples(df: DataFrame,
-                            candidates: Seq[Seq[String]]): Seq[(Long, Long, Long)] = {
-    val acc =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-    graft.util.Concurrency.runConcurrently(candidates.indices) { i =>
-      val r = tupleProfileAgg(df, candidates(i)).head()
-      acc.put(i, (r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-    candidates.indices.map(acc.get(_))
+  private def measure[P](count: Int,
+      refuted: Int => Option[P] = (_: Int) => None)(
+      exact: Int => P): (Seq[(P, Boolean)], Int) = {
+    val refutes = (0 until count).map(refuted)
+    val confirmIdx = refutes.indices.filter(refutes(_).isEmpty)
+    val exactOf = confirmIdx.zip(confirmIdx.grouped(MaxCandidates)
+      .flatMap(runConcurrently(_)(exact)).toSeq).toMap
+    (refutes.indices.map(i => refutes(i).fold((exactOf(i), true))((_, false))),
+      confirmIdx.size)
   }
 
-  /** The screen→refute→confirm scaffolding every HLL screen in this
-    * object shares ([[profileTuplesScreened]], [[fdTuplesScreened]],
-    * [[g3Screened]], [[keyErrorScreened]]): concurrent per-candidate
-    * SKETCH jobs, a driver-side refute predicate over the sketch
-    * readings, concurrent EXACT jobs for the survivors only, and the
-    * zip-back where refuted rows carry the sketch-derived profile with
-    * `isExact = false`. Returns the per-candidate (profile, isExact)
-    * pairs plus the number of exact confirm jobs actually paid — the
-    * spec/probe hook for "how many exact shuffles did the screen save".
+  /** Key profiles of one candidate batch: HLL screen-then-confirm when
+    * `hll`, one exact job per candidate otherwise.
     */
-  private def screenThenConfirm[S, P](count: Int)(screenJob: Int => S)(
-      refute: S => Boolean)(refutedProfile: S => P)(
-      exactJob: Int => P): (Seq[(P, Boolean)], Int) = {
-    val scr = new java.util.concurrent.ConcurrentHashMap[Int, S]()
-    graft.util.Concurrency.runConcurrently(0 until count) { i =>
-      scr.put(i, screenJob(i))
-    }
-    val refuted = (0 until count).map(i => refute(scr.get(i)))
-    val confirmIdx = (0 until count).filterNot(refuted)
-    val acc = new java.util.concurrent.ConcurrentHashMap[Int, P]()
-    graft.util.Concurrency.runConcurrently(confirmIdx) { i =>
-      acc.put(i, exactJob(i))
-    }
-    val profiles = (0 until count).map { i =>
-      if (refuted(i)) (refutedProfile(scr.get(i)), false)
-      else (acc.get(i), true)
-    }
-    (profiles, confirmIdx.size)
-  }
+  private def keyProfiles(df: DataFrame, cands: Seq[Seq[String]],
+      hll: Boolean, rsd: Double): Seq[((Long, Long, Long), Boolean)] =
+    if (hll) profileTuplesScreened(df, cands, rsd)._1
+    else measure(cands.size)(i => tupleProfile(df, cands(i)))._1
 
   /** HLL screen-then-exact-confirm profile (object doc: APPROX SCREEN).
     * The screen runs as concurrent per-candidate approx jobs — the same
@@ -391,18 +387,13 @@ object KeyDiscovery {
   private[graft] def profileTuplesScreened(df: DataFrame,
       candidates: Seq[Seq[String]],
       rsd: Double): (Seq[((Long, Long, Long), Boolean)], Int) = {
-    require(rsd > 0 && rsd < 0.2, s"need 0 < rsd < 0.2, got $rsd")
+    requireRsd(rsd)
     val eps = 5 * rsd
-    screenThenConfirm[(Long, Long, Long), (Long, Long, Long)](
-      candidates.size) { i =>
-      val r = screenTupleAgg(df, candidates(i), rsd).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    } { case (n, approxD, z) =>
-      z > 0L || approxD < ((1.0 - eps) * n).toLong
-    }(identity) { i =>
-      val row = tupleProfileAgg(df, candidates(i)).head()
-      (row.getLong(0), row.getLong(1), row.getLong(2))
-    }
+    val sketched = runConcurrently(candidates)(screenTuple(df, _, rsd))
+    measure(candidates.size, { i =>
+      val s @ (n, approxD, z) = sketched(i)
+      Option.when(z > 0L || approxD < ((1.0 - eps) * n).toLong)(s)
+    })(i => tupleProfile(df, candidates(i)))
   }
 
   /** One candidate's screening job: count, HLL tuple-distinct estimate,
@@ -437,20 +428,17 @@ object KeyDiscovery {
       count(when(cs.map(c => col(c).isNull).reduce(_ || _), lit(1)))
         .as("__z"))
 
-  /** The single batched aggregation behind `scanOnce = true` (one scan,
-    * one Expand with k+1 groups — the scan-bound-cluster alternative).
-    */
-  private[graft] def compositeKeyAgg(df: DataFrame,
-                                     candidates: Seq[Seq[String]]): DataFrame = {
-    val aggs = count(lit(1)).as("__n") +:
-      candidates.zipWithIndex.flatMap { case (cs, i) =>
-        Seq(
-          count_distinct(col(cs.head), cs.tail.map(col): _*).as(s"__d_$i"),
-          count(when(cs.map(c => col(c).isNull).reduce(_ || _), lit(1)))
-            .as(s"__z_$i"))
-      }
-    df.agg(aggs.head, aggs.tail: _*)
-  }
+  /** The eager readings of [[screenTupleAgg]] and [[tupleProfileAgg]]:
+    * (n, distinct, any-null). */
+  private def screenTuple(df: DataFrame, cs: Seq[String],
+                          rsd: Double): (Long, Long, Long) =
+    longs3(screenTupleAgg(df, cs, rsd).head())
+
+  private def tupleProfile(df: DataFrame, cs: Seq[String]): (Long, Long, Long) =
+    longs3(tupleProfileAgg(df, cs).head())
+
+  private def longs3(r: Row): (Long, Long, Long) =
+    (r.getLong(0), r.getLong(1), r.getLong(2))
 
   /** Shannon-entropy profile of the given columns: per column, the
     * non-null count, exact distinct count, entropy in nats over the value
@@ -486,35 +474,26 @@ object KeyDiscovery {
       s"column '$c' not in frame"))
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val acc =
-      new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Double)]()
-    graft.util.Concurrency.runConcurrently(cols) { cn =>
+    val counts = runConcurrently(cols) { cn =>
       val cDbl = col("cnt").cast(DoubleType)
-      val r = df.select(col(cn).cast(StringType).as("v"))
+      df.select(col(cn).cast(StringType).as("v"))
         .where(col("v").isNotNull)
         .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
         .agg(coalesce(sum(col("cnt")), lit(0L)).as("n"),
           count(lit(1)).as("d"),
           coalesce(sum(cDbl * log(cDbl)), lit(0.0)).as("clc"))
         .head()
-      acc.put(cn, (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }
-    val rows = cols.map { cn =>
-      val (n, d, clc) = acc.get(cn)
+    val rows = cols.zip(counts).map { case (cn, r) =>
+      val (n, d, clc) = (r.getLong(0), r.getLong(1), r.getDouble(2))
       val h = if (n == 0L) 0.0 else r6(math.log(n.toDouble) - clc / n)
       val hn = if (d <= 1L) 0.0
         else r6((math.log(n.toDouble) - clc / n) / math.log(d.toDouble))
       Row(cn, n, d, h, hn)
     }
-    val spark = df.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("column_name", StringType, nullable = false),
-        StructField("n", LongType, nullable = false),
-        StructField("n_distinct", LongType, nullable = false),
-        StructField("entropy", DoubleType, nullable = false),
-        StructField("normalized_entropy", DoubleType, nullable = false))))
+    localFrame(df.sparkSession, rows, schema("column_name" -> StringType,
+      "n" -> LongType, "n_distinct" -> LongType, "entropy" -> DoubleType,
+      "normalized_entropy" -> DoubleType))
   }
 
   /** Exact functional-dependency profile over all ordered pairs of the
@@ -523,8 +502,8 @@ object KeyDiscovery {
     * `count(DISTINCT a) = count(DISTINCT a, b)` over rows where both are
     * non-null (Spark's multi-argument distinct count skips any-null rows;
     * the oracle mirrors it with a filtered struct count). Pairs measure
-    * in concurrent two-column jobs (see the object doc; `scanOnce =
-    * true` batches all k·(k−1) measures into one aggregation instead).
+    * in concurrent two-column jobs ([[tupleFdAgg]] with a one-column
+    * determinant; see the object doc).
     *
     * `screen = Hll`/`Auto` is the FD analog of the key screen —
     * REFUTE-only:
@@ -549,42 +528,34 @@ object KeyDiscovery {
     * order.
     */
   def functionalDependencies(df: DataFrame, cols: Seq[String],
-                             scanOnce: Boolean = false,
                              screen: Screen = Screen.Exact,
                              screenRsd: Double = 0.02): DataFrame = {
-    require(!(scanOnce && screen == Screen.Hll),
-      "scanOnce and the HLL screen are alternative plans — pick one")
-    // explicit scanOnce wins over Auto (see compositeCandidateKeys)
-    val hll = !scanOnce && useHll(df, screen)
+    val hll = useHll(screen, df)
     require(cols.size >= 2, "need at least two columns")
     cols.foreach(c => require(df.columns.contains(c),
       s"column '$c' not in frame"))
-    val pairs = for { a <- cols; b <- cols if a != b } yield (a, b)
+    val pairs = for { a <- cols; b <- cols if a != b } yield (Seq(a), b)
     require(pairs.size <= MaxCandidates,
       s"${cols.size} columns give ${pairs.size} ordered pairs > " +
-        s"$MaxCandidates: bound the per-call fan-out (k jobs here, a " +
-        "~2k²-group Expand under scanOnce) — profile in staged batches")
-    val profiles: Seq[((Long, Long), Boolean)] =
-      if (scanOnce) {
-        val r = fdAgg(df, pairs).head()
-        pairs.indices.map(i => ((r.getLong(2 * i), r.getLong(2 * i + 1)), true))
-      } else if (hll) {
-        fdTuplesScreened(df, pairs.map { case (a, b) => (Seq(a), b) },
-          screenRsd)._1
-      } else {
-        val acc =
-          new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-        graft.util.Concurrency.runConcurrently(pairs.indices) { i =>
-          val r = pairProfileAgg(df, pairs(i)).head()
-          acc.put(i, (r.getLong(0), r.getLong(1)))
-        }
-        pairs.indices.map(i => (acc.get(i), true))
-      }
-    val rows = pairs.zip(profiles).map { case ((a, b), ((da, dp), exact)) =>
-      Row(a, b, da, dp, da == dp, exact)
+        s"$MaxCandidates: bound the per-call fan-out — profile in staged " +
+        "batches")
+    val rows = pairs.zip(fdProfiles(df, pairs, hll, screenRsd)).map {
+      case ((a, b), ((da, dp), exact)) =>
+        Row(a.head, b, da, dp, da == dp, exact)
     }
-    fdResult(df.sparkSession, rows)
+    localFrame(df.sparkSession, rows, schema("determinant" -> StringType,
+      "dependent" -> StringType, "n_determinant" -> LongType,
+      "n_pairs" -> LongType, "holds" -> BooleanType,
+      "is_exact" -> BooleanType))
   }
+
+  /** FD profiles of one (tuple, dependent) batch: the refute-only screen
+    * when `hll`, one exact [[tupleFdAgg]] job per pair otherwise.
+    */
+  private def fdProfiles(df: DataFrame, pairs: Seq[(Seq[String], String)],
+      hll: Boolean, rsd: Double): Seq[((Long, Long), Boolean)] =
+    if (hll) fdTuplesScreened(df, pairs, rsd)._1
+    else measure(pairs.size)(i => fdProfile(df, pairs(i)))._1
 
   /** Refute-only HLL screen for FD measures (scaladoc at
     * [[functionalDependencies]]): each (tuple, dependent) first measures
@@ -595,19 +566,13 @@ object KeyDiscovery {
   private[graft] def fdTuplesScreened(df: DataFrame,
       pairs: Seq[(Seq[String], String)],
       rsd: Double): (Seq[((Long, Long), Boolean)], Int) = {
-    require(rsd > 0 && rsd < 0.2, s"need 0 < rsd < 0.2, got $rsd")
+    requireRsd(rsd)
     val eps = 8 * rsd
-    screenThenConfirm[(Long, Long), (Long, Long)](pairs.size) { i =>
-      val (xs, c) = pairs(i)
-      val r = screenFdAgg(df, xs, c, rsd).head()
-      (r.getLong(0), r.getLong(1))
-    } { case (da, dp) =>
-      dp > ((1.0 + eps) * da).toLong
-    }(identity) { i =>
-      val (xs, c) = pairs(i)
-      val r = tupleFdAgg(df, xs, c).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    val sketched = runConcurrently(pairs)(screenFd(df, _, rsd))
+    measure(pairs.size, { i =>
+      val (da, dp, _) = sketched(i)
+      Option.when(dp > ((1.0 + eps) * da).toLong)((da, dp))
+    })(i => fdProfile(df, pairs(i)))
   }
 
   /** One FD screen job: HLL estimates of the determinant distinct and
@@ -629,6 +594,11 @@ object KeyDiscovery {
       count(when(gate, 1)).as("__n"))
   }
 
+  /** The eager reading of [[screenFdAgg]]: (da, dp, n). */
+  private def screenFd(df: DataFrame, pair: (Seq[String], String),
+                       rsd: Double): (Long, Long, Long) =
+    longs3(screenFdAgg(df, pair._1, pair._2, rsd).head())
+
   /** Composite-determinant functional dependencies — the TANE general
     * case (Huhtala et al. 1999): for every dependent `c`, walk the
     * determinant lattice `X ⊆ determinants \ {c}` by arity, measuring
@@ -638,16 +608,15 @@ object KeyDiscovery {
     * convention lifted to tuples), and PRUNE supersets of determinants
     * that already hold: if `a → c` holds then `(a,b) → c` is implied
     * (the actual TANE rule — measuring it spends a shuffle to learn
-    * nothing). Each level measures in concurrent per-tuple jobs through
-    * the same [[MaxCandidates]]-chunked machinery as
-    * [[discoverKeysStaged]], and like it generates each level
-    * Apriori-style from the previous level's NON-holding survivors per
-    * dependent ([[aprioriNextLevel]]) — identical output to
-    * enumerate-then-filter with driver work bounded by survivors, not
-    * C(n, a). `screen = Hll`/`Auto` applies the refute-only HLL screen
-    * (scaladoc at [[functionalDependencies]]) at every level — every
-    * `holds = true` stays exact, so the prune set is unchanged by
-    * screening up to the documented 10⁻⁶ mis-refute odds.
+    * nothing). The walk is [[latticeWalk]] with one target per
+    * dependent: concurrent per-tuple jobs in [[MaxCandidates]] chunks,
+    * each level generated Apriori-style from the previous level's
+    * NON-holding survivors per dependent ([[aprioriNextLevel]]) —
+    * identical output to enumerate-then-filter with driver work bounded
+    * by survivors, not C(n, a). `screen = Hll`/`Auto` applies the
+    * refute-only HLL screen (scaladoc at [[functionalDependencies]]) at
+    * every level — every `holds = true` stays exact, so the prune set is
+    * unchanged by screening up to the documented 10⁻⁶ mis-refute odds.
     *
     * Output: (determinant comma-joined, arity, dependent, n_determinant,
     * n_pairs, holds, is_exact) for every MEASURED pair in lattice order
@@ -659,6 +628,23 @@ object KeyDiscovery {
                                       maxArity: Int = 2,
                                       screen: Screen = Screen.Exact,
                                       screenRsd: Double = 0.02): DataFrame = {
+    requireFdLattice(df, determinants, dependents, maxArity)
+    val hll = useHll(screen, df)
+    val walked = latticeWalk(determinants, dependents, maxArity)(_ != _) {
+      fdProfiles(df, _, hll, screenRsd)
+    } { case ((da, dp), _) => da == dp }
+    val rows = walked.map { case ((xs, c), ((da, dp), exact)) =>
+      Row(xs.mkString(","), xs.size, c, da, dp, da == dp, exact)
+    }
+    localFrame(df.sparkSession, rows, schema("determinant" -> StringType,
+      "arity" -> IntegerType, "dependent" -> StringType,
+      "n_determinant" -> LongType, "n_pairs" -> LongType,
+      "holds" -> BooleanType, "is_exact" -> BooleanType))
+  }
+
+  /** Caller-input checks both composite FD walks share. */
+  private def requireFdLattice(df: DataFrame, determinants: Seq[String],
+                               dependents: Seq[String], maxArity: Int): Unit = {
     require(maxArity >= 1, s"need maxArity >= 1, got $maxArity")
     require(determinants.nonEmpty, "need at least one determinant column")
     require(dependents.nonEmpty, "need at least one dependent column")
@@ -668,59 +654,6 @@ object KeyDiscovery {
       "duplicate dependent column")
     (determinants ++ dependents).foreach(c =>
       require(df.columns.contains(c), s"column '$c' not in frame"))
-    val hll = useHll(df, screen)
-    val idx = determinants.zipWithIndex.toMap
-    val depIdx = dependents.zipWithIndex.toMap
-    // per dependent: the previous level's measured NON-holding
-    // determinant sets — holding sets drop out, which IS the TANE prune
-    // (their supersets can never be Apriori-generated)
-    val survivorsFor = scala.collection.mutable.Map(
-      dependents.map(c => c -> Seq.empty[Seq[String]]): _*)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    for (a <- 1 to maxArity) {
-      val level: Seq[(Seq[String], String)] = {
-        import scala.math.Ordering.Implicits.seqOrdering
-        dependents.flatMap { c =>
-          val cands =
-            if (a == 1) determinants.filterNot(_ == c).map(Seq(_))
-            else aprioriNextLevel(survivorsFor(c), idx)
-          cands.map(xs => (xs, c))
-        }.sortBy { case (xs, c) => (xs.map(idx), depIdx(c)) }
-      }
-      val next = scala.collection.mutable.Map(
-        dependents.map(c => c -> Seq.newBuilder[Seq[String]]): _*)
-      level.grouped(MaxCandidates).foreach { chunk =>
-        val profiles: Seq[((Long, Long), Boolean)] =
-          if (hll) fdTuplesScreened(df, chunk, screenRsd)._1
-          else {
-            val acc =
-              new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-            graft.util.Concurrency.runConcurrently(chunk.indices) { i =>
-              val (xs, c) = chunk(i)
-              val r = tupleFdAgg(df, xs, c).head()
-              acc.put(i, (r.getLong(0), r.getLong(1)))
-            }
-            chunk.indices.map(i => (acc.get(i), true))
-          }
-        chunk.zip(profiles).foreach { case ((xs, c), ((da, dp), exact)) =>
-          val holds = da == dp
-          rows += Row(xs.mkString(","), xs.size, c, da, dp, holds, exact)
-          if (!holds) next(c) += xs
-        }
-      }
-      dependents.foreach(c => survivorsFor(c) = next(c).result())
-    }
-    val spark = df.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
-      StructType(Seq(
-        StructField("determinant", StringType, nullable = false),
-        StructField("arity", IntegerType, nullable = false),
-        StructField("dependent", StringType, nullable = false),
-        StructField("n_determinant", LongType, nullable = false),
-        StructField("n_pairs", LongType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
   }
 
   /** One (tuple → dependent) FD measure: the determinant distinct is
@@ -739,39 +672,10 @@ object KeyDiscovery {
         (xs.tail.map(col) :+ col(c)): _*).as("__dp"))
   }
 
-  /** One ordered pair's FD measures — the per-pair concurrent job. */
-  private[graft] def pairProfileAgg(df: DataFrame,
-                                    pair: (String, String)): DataFrame = {
-    val (a, b) = pair
-    df.agg(
-      count_distinct(when(col(b).isNotNull, col(a))).as("__da"),
-      count_distinct(col(a), col(b)).as("__dp"))
-  }
-
-  /** The batched aggregation behind `scanOnce = true` (all pair measures
-    * in one scan — one Expand with ~2k² distinct groups).
-    */
-  private[graft] def fdAgg(df: DataFrame,
-                           pairs: Seq[(String, String)]): DataFrame = {
-    val aggs = pairs.flatMap { case (a, b) =>
-      Seq(
-        count_distinct(when(col(b).isNotNull, col(a)))
-          .as(s"__da_${a}_$b"),
-        count_distinct(col(a), col(b)).as(s"__dp_${a}_$b"))
-    }
-    df.agg(aggs.head, aggs.tail: _*)
-  }
-
-  private def fdResult(spark: SparkSession, rows: Seq[Row]): DataFrame = {
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("determinant", StringType, nullable = false),
-        StructField("dependent", StringType, nullable = false),
-        StructField("n_determinant", LongType, nullable = false),
-        StructField("n_pairs", LongType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
+  private def fdProfile(df: DataFrame,
+                        pair: (Seq[String], String)): (Long, Long) = {
+    val r = tupleFdAgg(df, pair._1, pair._2).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   // ---------------------------------------------- approximate dependencies
@@ -839,68 +743,26 @@ object KeyDiscovery {
                                         maxArity: Int = 1,
                                         screen: Screen = Screen.Exact,
                                         screenRsd: Double = 0.02): DataFrame = {
-    require(maxArity >= 1, s"need maxArity >= 1, got $maxArity")
+    requireFdLattice(df, determinants, dependents, maxArity)
     require(maxError >= 0 && maxError < 1,
       s"need 0 <= maxError < 1, got $maxError")
-    require(determinants.nonEmpty, "need at least one determinant column")
-    require(dependents.nonEmpty, "need at least one dependent column")
-    require(determinants.distinct.size == determinants.size,
-      "duplicate determinant column")
-    require(dependents.distinct.size == dependents.size,
-      "duplicate dependent column")
-    (determinants ++ dependents).foreach(c =>
-      require(df.columns.contains(c), s"column '$c' not in frame"))
-    val hll = useHll(df, screen)
-    val idx = determinants.zipWithIndex.toMap
-    val depIdx = dependents.zipWithIndex.toMap
-    val survivorsFor = scala.collection.mutable.Map(
-      dependents.map(c => c -> Seq.empty[Seq[String]]): _*)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    for (a <- 1 to maxArity) {
-      val level: Seq[(Seq[String], String)] = {
-        import scala.math.Ordering.Implicits.seqOrdering
-        dependents.flatMap { c =>
-          val cands =
-            if (a == 1) determinants.filterNot(_ == c).map(Seq(_))
-            else aprioriNextLevel(survivorsFor(c), idx)
-          cands.map(xs => (xs, c))
-        }.sortBy { case (xs, c) => (xs.map(idx), depIdx(c)) }
-      }
-      val next = scala.collection.mutable.Map(
-        dependents.map(c => c -> Seq.newBuilder[Seq[String]]): _*)
-      level.grouped(MaxCandidates).foreach { chunk =>
-        val profiles: Seq[((Long, Long), Boolean)] =
-          if (hll) g3Screened(df, chunk, maxError, screenRsd)._1
-          else {
-            val acc =
-              new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-            graft.util.Concurrency.runConcurrently(chunk.indices) { i =>
-              acc.put(i, g3Profile(df, chunk(i)._1, chunk(i)._2))
-            }
-            chunk.indices.map(i => (acc.get(i), true))
-          }
-        chunk.zip(profiles).foreach { case ((xs, c), ((n, kept), exact)) =>
-          val viol = n - kept
-          val g3 = if (n == 0L) 0.0 else viol.toDouble / n
-          val holds = exact && viol.toDouble <= maxError * n
-          rows += Row(xs.mkString(","), xs.size, c, n, kept, g3, holds, exact)
-          if (!holds) next(c) += xs
-        }
-      }
-      dependents.foreach(c => survivorsFor(c) = next(c).result())
+    val hll = useHll(screen, df)
+    def holds(p: ((Long, Long), Boolean)): Boolean = p match {
+      case ((n, kept), exact) => exact && (n - kept).toDouble <= maxError * n
     }
-    val spark = df.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
-      StructType(Seq(
-        StructField("determinant", StringType, nullable = false),
-        StructField("arity", IntegerType, nullable = false),
-        StructField("dependent", StringType, nullable = false),
-        StructField("n_rows", LongType, nullable = false),
-        StructField("n_kept", LongType, nullable = false),
-        StructField("g3", DoubleType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
+    val walked = latticeWalk(determinants, dependents, maxArity)(_ != _) {
+      chunk =>
+        if (hll) g3Screened(df, chunk, maxError, screenRsd)._1
+        else measure(chunk.size)(i => g3Profile(df, chunk(i)))._1
+    }(holds)
+    val rows = walked.map { case ((xs, c), p @ ((n, kept), exact)) =>
+      val g3 = if (n == 0L) 0.0 else (n - kept).toDouble / n
+      Row(xs.mkString(","), xs.size, c, n, kept, g3, holds(p), exact)
+    }
+    localFrame(df.sparkSession, rows, schema("determinant" -> StringType,
+      "arity" -> IntegerType, "dependent" -> StringType,
+      "n_rows" -> LongType, "n_kept" -> LongType, "g3" -> DoubleType,
+      "holds" -> BooleanType, "is_exact" -> BooleanType))
   }
 
   /** One g₃ measure: (n, Σ_x max_y count) over the gated rows — two
@@ -929,23 +791,19 @@ object KeyDiscovery {
       pairs: Seq[(Seq[String], String)],
       maxError: Double,
       rsd: Double): (Seq[((Long, Long), Boolean)], Int) = {
-    require(rsd > 0 && rsd < 0.2, s"need 0 < rsd < 0.2, got $rsd")
-    screenThenConfirm[(Long, Long, Long), (Long, Long)](pairs.size) { i =>
-      val (xs, c) = pairs(i)
-      val r = screenFdAgg(df, xs, c, rsd).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    } { case (da, dp, n) =>
-      (dp - da).toDouble > maxError * n + 8 * rsd * dp
-    } { case (da, dp, n) =>
-      val viol = math.min(n, math.max(0L, dp - da))
-      (n, n - viol)
-    }(i => g3Profile(df, pairs(i)._1, pairs(i)._2))
+    requireRsd(rsd)
+    val sketched = runConcurrently(pairs)(screenFd(df, _, rsd))
+    measure(pairs.size, { i =>
+      val (da, dp, n) = sketched(i)
+      Option.when((dp - da).toDouble > maxError * n + 8 * rsd * dp)(
+        (n, n - math.min(n, math.max(0L, dp - da))))
+    })(i => g3Profile(df, pairs(i)))
   }
 
   /** One exact g₃ profile: (n, kept) via [[g3Agg]]. */
-  private def g3Profile(df: DataFrame, xs: Seq[String],
-                        c: String): (Long, Long) = {
-    val r = g3Agg(df, xs, c).head()
+  private def g3Profile(df: DataFrame,
+                        pair: (Seq[String], String)): (Long, Long) = {
+    val r = g3Agg(df, pair._1, pair._2).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -1228,40 +1086,24 @@ object KeyDiscovery {
       s"need 0 <= maxError < 1, got $maxError")
     require(cols.nonEmpty, "need at least one column")
     require(cols.distinct.size == cols.size, "duplicate column")
-    val hll = useHll(df, screen)
-    val idx = cols.zipWithIndex.toMap
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var survivors: Seq[Seq[String]] = Nil
-    for (a <- 1 to maxArity if a == 1 || survivors.nonEmpty) {
-      val level: Seq[Seq[String]] =
-        if (a == 1) cols.map(Seq(_)) else aprioriNextLevel(survivors, idx)
-      val next = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-      level.grouped(MaxCandidates).foreach { chunk =>
-        validateCandidates(df, chunk)
-        val profiles =
-          if (hll) keyErrorScreened(df, chunk, maxError, screenRsd)._1
-          else profileTuples(df, chunk).map((_, true))
-        chunk.zip(profiles).foreach { case (cs, ((n, d, z), exact)) =>
-          val err = if (n == 0L) 0.0 else (n - d).toDouble / n
-          val holds = exact && (n - d).toDouble <= maxError * n
-          rows += Row(cs.mkString(","), cs.size, n, d, z, err, holds, exact)
-          if (!holds) next += cs
-        }
-      }
-      survivors = next.toSeq
+    val hll = useHll(screen, df)
+    def holds(p: ((Long, Long, Long), Boolean)): Boolean = p match {
+      case ((n, d, _), exact) => exact && (n - d).toDouble <= maxError * n
     }
-    val spark = df.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
-      StructType(Seq(
-        StructField("columns", StringType, nullable = false),
-        StructField("arity", IntegerType, nullable = false),
-        StructField("n_rows", LongType, nullable = false),
-        StructField("n_distinct", LongType, nullable = false),
-        StructField("n_any_null", LongType, nullable = false),
-        StructField("uniqueness_error", DoubleType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
+    val walked = latticeWalk(cols, Seq(()), maxArity)((_, _) => true) { chunk =>
+      val cands = chunk.map(_._1)
+      validateCandidates(df, cands)
+      if (hll) keyErrorScreened(df, cands, maxError, screenRsd)._1
+      else measure(cands.size)(i => tupleProfile(df, cands(i)))._1
+    }(holds)
+    val rows = walked.map { case ((cs, _), p @ ((n, d, z), exact)) =>
+      val err = if (n == 0L) 0.0 else (n - d).toDouble / n
+      Row(cs.mkString(","), cs.size, n, d, z, err, holds(p), exact)
+    }
+    localFrame(df.sparkSession, rows, schema("columns" -> StringType,
+      "arity" -> IntegerType, "n_rows" -> LongType, "n_distinct" -> LongType,
+      "n_any_null" -> LongType, "uniqueness_error" -> DoubleType,
+      "holds" -> BooleanType, "is_exact" -> BooleanType))
   }
 
   /** Refute-only screen for ε-key measures (scaladoc at
@@ -1276,19 +1118,13 @@ object KeyDiscovery {
       candidates: Seq[Seq[String]],
       maxError: Double,
       rsd: Double): (Seq[((Long, Long, Long), Boolean)], Int) = {
-    require(rsd > 0 && rsd < 0.2, s"need 0 < rsd < 0.2, got $rsd")
-    screenThenConfirm[(Long, Long, Long), (Long, Long, Long)](
-      candidates.size) { i =>
-      val r = screenTupleAgg(df, candidates(i), rsd).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    } { case (n, dEst, _) =>
-      n - (1.0 + 8 * rsd) * dEst > maxError * n
-    } { case (n, dEst, z) =>
-      (n, math.min(n, dEst), z)
-    } { i =>
-      val r = tupleProfileAgg(df, candidates(i)).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
+    requireRsd(rsd)
+    val sketched = runConcurrently(candidates)(screenTuple(df, _, rsd))
+    measure(candidates.size, { i =>
+      val (n, dEst, z) = sketched(i)
+      Option.when(n - (1.0 + 8 * rsd) * dEst > maxError * n)(
+        (n, math.min(n, dEst), z))
+    })(i => tupleProfile(df, candidates(i)))
   }
 
   // ------------------------------------------------- inclusion dependencies
@@ -1357,24 +1193,30 @@ object KeyDiscovery {
     val pairs = for (a <- leftCols; b <- rightCols) yield (Seq(a), Seq(b))
     require(pairs.size <= MaxCandidates,
       s"${pairs.size} pairs > $MaxCandidates: bound the per-call fan-out")
-    val profiles = indProfiles(left, right, pairs,
-      indUseHll(Seq(left, right), screen), screenRsd, minCoverage)
+    val profiles = indPairProfiles(left, right, pairs, screen, screenRsd,
+      minCoverage)
     val rows = pairs.zip(profiles).map {
       case ((a, b), ((na, nb, miss), exact)) =>
         Row(a.head, b.head, na, nb, miss, indCoverage(na, miss),
           indHolds(exact, miss, na, minCoverage), exact)
     }
-    left.sparkSession.createDataFrame(
-      left.sparkSession.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("left_column", StringType, nullable = false),
-        StructField("right_column", StringType, nullable = false),
-        StructField("n_left_distinct", LongType, nullable = false),
-        StructField("n_right_distinct", LongType, nullable = false),
-        StructField("n_missing", LongType, nullable = false),
-        StructField("coverage", DoubleType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
+    localFrame(left.sparkSession, rows, schema("left_column" -> StringType,
+      "right_column" -> StringType, "n_left_distinct" -> LongType,
+      "n_right_distinct" -> LongType, "n_missing" -> LongType,
+      "coverage" -> DoubleType, "holds" -> BooleanType,
+      "is_exact" -> BooleanType))
+  }
+
+  /** One (left, right) frame pair's IND measures: the sweep's level
+    * measurement ([[measureIndLevel]]) over the two-table list.
+    */
+  private def indPairProfiles(left: DataFrame, right: DataFrame,
+      pairs: Seq[(Seq[String], Seq[String])], screen: Screen, rsd: Double,
+      theta: Double): Seq[((Long, Long, Long), Boolean)] = {
+    requireRsd(rsd)
+    measureIndLevel(IndexedSeq(left, right),
+      pairs.map { case (a, b) => (0, a, 1, b) }, useHll(screen, left, right),
+      rsd, theta)
   }
 
   /** PARTIAL-IND verdict: the left distinct set is contained up to the
@@ -1454,40 +1296,20 @@ object KeyDiscovery {
       b.foreach(c => require(right.columns.contains(c),
         s"column '$c' not in right frame"))
     }
-    val profiles = indProfiles(left, right, pairs,
-      indUseHll(Seq(left, right), screen), screenRsd, minCoverage)
+    val profiles = indPairProfiles(left, right, pairs, screen, screenRsd,
+      minCoverage)
     val rows = pairs.zip(profiles).map {
       case ((a, b), ((na, nb, miss), exact)) =>
         Row(a.mkString(","), b.mkString(","), a.size, na, nb, miss,
           indCoverage(na, miss), indHolds(exact, miss, na, minCoverage),
           exact)
     }
-    left.sparkSession.createDataFrame(
-      left.sparkSession.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("left_columns", StringType, nullable = false),
-        StructField("right_columns", StringType, nullable = false),
-        StructField("arity", IntegerType, nullable = false),
-        StructField("n_left_distinct", LongType, nullable = false),
-        StructField("n_right_distinct", LongType, nullable = false),
-        StructField("n_missing", LongType, nullable = false),
-        StructField("coverage", DoubleType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
+    localFrame(left.sparkSession, rows, schema("left_columns" -> StringType,
+      "right_columns" -> StringType, "arity" -> IntegerType,
+      "n_left_distinct" -> LongType, "n_right_distinct" -> LongType,
+      "n_missing" -> LongType, "coverage" -> DoubleType,
+      "holds" -> BooleanType, "is_exact" -> BooleanType))
   }
-
-  /** The Auto decision for IND measures: the LARGER side's optimizer scan
-    * estimate against [[AutoScreenBytes]] (either side large enough makes
-    * the exact distinct shuffle worth screening away).
-    */
-  private def indUseHll(frames: Seq[DataFrame], screen: Screen): Boolean =
-    screen match {
-      case Screen.Exact => false
-      case Screen.Hll   => true
-      case Screen.Auto  =>
-        frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .max >= BigInt(AutoScreenBytes)
-    }
 
   /** One side's distinct non-null tuple values, components string-cast and
     * positionally renamed `__v0..__v{k-1}` so pair joins are pure
@@ -1537,7 +1359,7 @@ object KeyDiscovery {
   }
 
   /** One sketch-only aggregation over a frame for MANY tuples at once —
-    * the per-side screen job [[indProfiles]] and [[discoverInds]] share
+    * the per-side screen job every IND measure shares
     * (the staged sweep hoists it: each table is sketched ONCE across all
     * its pairs). Returns null for an all-null/empty tuple.
     */
@@ -1588,43 +1410,6 @@ object KeyDiscovery {
         val (ea, eb, eu) = (r.getLong(1), r.getLong(2), r.getLong(3))
         r.getInt(0) -> ((ea, eb, math.min(ea, math.max(0L, eu - eb))))
       }.toMap
-  }
-
-  /** Shared IND measurement over tuple pairs of one (left, right) frame
-    * pair: optional HLL-union refute screen (one sketch aggregation per
-    * side covering ALL its tuples), exact full-outer tuple-join confirms
-    * for survivors, concurrent per-pair jobs. Returns
-    * ((nLeft, nRight, nMissing), isExact) per pair in caller order.
-    */
-  private def indProfiles(left: DataFrame, right: DataFrame,
-      pairs: Seq[(Seq[String], Seq[String])],
-      hll: Boolean, rsd: Double,
-      theta: Double = 1.0): Seq[((Long, Long, Long), Boolean)] = {
-    require(rsd > 0 && rsd < 0.2, s"need 0 < rsd < 0.2, got $rsd")
-    val screenedOut: Map[Int, (Long, Long, Long)] =
-      if (!hll) Map.empty
-      else {
-        val lgK = indLgK(rsd)
-        val skL = indSketches(left, pairs.map(_._1).distinct, lgK)
-        val skR = indSketches(right, pairs.map(_._2).distinct, lgK)
-        indRefuted(left.sparkSession,
-          pairs.zipWithIndex.flatMap { case ((a, b), i) =>
-            if (skL(a) == null || skR(b) == null) Nil
-            else Seq((i, skL(a), skR(b)))
-          }, rsd, theta)
-      }
-    val acc = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-    val confirmIdx = pairs.indices.filterNot(screenedOut.contains)
-    graft.util.Concurrency.runConcurrently(confirmIdx) { i =>
-      val (a, b) = pairs(i)
-      acc.put(i, indConfirm(left, a, right, b))
-    }
-    pairs.indices.map { i =>
-      screenedOut.get(i) match {
-        case Some(est) => (est, false)
-        case None      => (acc.get(i), true)
-      }
-    }
   }
 
   /** STAGED schema-wide IND search — the operational driver for a
@@ -1695,8 +1480,7 @@ object KeyDiscovery {
         "projection rule does not transfer coverage fractions")
     require(tables.map(_._1).distinct.size == tables.size,
       "duplicate table name")
-    require(screenRsd > 0 && screenRsd < 0.2,
-      s"need 0 < rsd < 0.2, got $screenRsd")
+    requireRsd(screenRsd)
     tables.foreach { case (t, df, cs) =>
       require(cs.nonEmpty, s"table '$t': need at least one column")
       require(cs.distinct.size == cs.size, s"table '$t': duplicate column")
@@ -1710,7 +1494,7 @@ object KeyDiscovery {
         s"column '$c' not in table '$t'"))
     }
     val tabs = tables.toIndexedSeq
-    val hll = indUseHll(tabs.map(_._2), screen)
+    val hll = useHll(screen, tabs.map(_._2): _*)
     // a candidate at any arity: (leftTableIdx, leftTuple, rightTableIdx,
     // rightTuple); its lattice identity per table pair is the SET of
     // (leftColIdx, rightColIdx) items in canonical order
@@ -1750,7 +1534,8 @@ object KeyDiscovery {
               ls.distinct.size == ls.size && rs.distinct.size == rs.size }
         }
       }
-      val profiles = measureIndLevel(tabs, level, hll, screenRsd, minCoverage)
+      val profiles = measureIndLevel(tabs.map(_._2), level, hll, screenRsd,
+        minCoverage)
       val nextHolding = scala.collection.mutable.Map
         .empty[(Int, Int), scala.collection.mutable.ArrayBuffer[Seq[String]]]
       level.zip(profiles).foreach { case ((li, ls, ri, rs), ((na, nb, miss), exact)) =>
@@ -1767,35 +1552,28 @@ object KeyDiscovery {
       holding.clear()
       nextHolding.foreach { case (k, v) => holding(k) = v.toSeq }
     }
-    val spark = tabs.head._2.sparkSession
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
-      StructType(Seq(
-        StructField("left_table", StringType, nullable = false),
-        StructField("left_columns", StringType, nullable = false),
-        StructField("right_table", StringType, nullable = false),
-        StructField("right_columns", StringType, nullable = false),
-        StructField("arity", IntegerType, nullable = false),
-        StructField("n_left_distinct", LongType, nullable = false),
-        StructField("n_right_distinct", LongType, nullable = false),
-        StructField("n_missing", LongType, nullable = false),
-        StructField("coverage", DoubleType, nullable = false),
-        StructField("holds", BooleanType, nullable = false),
-        StructField("is_exact", BooleanType, nullable = false))))
+    localFrame(tabs.head._2.sparkSession, rows.toSeq, schema(
+      "left_table" -> StringType, "left_columns" -> StringType,
+      "right_table" -> StringType, "right_columns" -> StringType,
+      "arity" -> IntegerType, "n_left_distinct" -> LongType,
+      "n_right_distinct" -> LongType, "n_missing" -> LongType,
+      "coverage" -> DoubleType, "holds" -> BooleanType,
+      "is_exact" -> BooleanType))
   }
 
-  /** Measure one level of sweep candidates: the per-table sketch hoist
-    * (one sketch-only aggregation per table covering all its live tuples),
-    * driver-side refutes, exact confirm joins in [[MaxCandidates]]-bounded
-    * concurrent chunks. Returns ((nLeft, nRight, nMissing), isExact) per
-    * candidate in order.
+  /** Measure one level of IND candidates over `frames` (the sweep's
+    * tables, or one call's (left, right) pair): the per-table sketch
+    * hoist (one sketch-only aggregation per table covering all its live
+    * tuples), driver-side refutes, exact confirm joins in
+    * [[MaxCandidates]]-bounded concurrent chunks. Returns ((nLeft,
+    * nRight, nMissing), isExact) per candidate in order.
     */
-  private def measureIndLevel(tabs: IndexedSeq[(String, DataFrame, Seq[String])],
+  private def measureIndLevel(frames: IndexedSeq[DataFrame],
       cands: Seq[(Int, Seq[String], Int, Seq[String])],
       hll: Boolean, rsd: Double,
-      theta: Double = 1.0): Seq[((Long, Long, Long), Boolean)] = {
-    if (cands.isEmpty) return Nil
+      theta: Double): Seq[((Long, Long, Long), Boolean)] = {
     val screenedOut: Map[Int, (Long, Long, Long)] =
-      if (!hll) Map.empty
+      if (!hll || cands.isEmpty) Map.empty
       else {
         val lgK = indLgK(rsd)
         val need: Map[Int, Seq[Seq[String]]] =
@@ -1803,27 +1581,17 @@ object KeyDiscovery {
             cands.map { case (_, _, ri, b) => (ri, b) })
             .groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
         val sk = need.map { case (ti, tuples) =>
-          ti -> indSketches(tabs(ti)._2, tuples, lgK) }
-        indRefuted(tabs.head._2.sparkSession,
+          ti -> indSketches(frames(ti), tuples, lgK) }
+        indRefuted(frames.head.sparkSession,
           cands.zipWithIndex.flatMap { case ((li, a, ri, b), i) =>
             val (ska, skb) = (sk(li)(a), sk(ri)(b))
             if (ska == null || skb == null) Nil else Seq((i, ska, skb))
           }, rsd, theta)
       }
-    val acc = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-    cands.indices.filterNot(screenedOut.contains)
-      .grouped(MaxCandidates).foreach { chunk =>
-        graft.util.Concurrency.runConcurrently(chunk) { i =>
-          val (li, a, ri, b) = cands(i)
-          acc.put(i, indConfirm(tabs(li)._2, a, tabs(ri)._2, b))
-        }
-      }
-    cands.indices.map { i =>
-      screenedOut.get(i) match {
-        case Some(est) => (est, false)
-        case None      => (acc.get(i), true)
-      }
-    }
+    measure(cands.size, screenedOut.get) { i =>
+      val (li, a, ri, b) = cands(i)
+      indConfirm(frames(li), a, frames(ri), b)
+    }._1
   }
 
   // --------------------------------------------------- order dependencies
@@ -1879,30 +1647,9 @@ object KeyDiscovery {
       Seq(x, y).foreach(c => require(df.columns.contains(c),
         s"column '$c' not in frame"))
     }
-    val spark = df.sparkSession
-    val p =
-      if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // pairs batched by on-column (r16 optimization): one shared
-    // collapse + prefix-extrema job per distinct x computes every one
-    // of its y verdicts at once; distinct on-columns still run as
-    // concurrent driver jobs (an m-column sweep drops from m·(m−1)
-    // grouped-extrema pipelines to m).
-    val byX: Seq[(String, Seq[(Int, String)])] =
-      pairs.zipWithIndex.map { case ((x, y), i) => (x, i, y) }
-        .groupBy(_._1).toSeq
-        .map { case (x, g) => (x, g.map(t => (t._2, t._3))) }
-    val acc =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-    graft.util.Concurrency.runConcurrently(byX) { case (x, iys) =>
-      val r = orderDependencyAggMulti(df, x, iys.map(_._2), p).head()
-      iys.zipWithIndex.foreach { case ((pairId, _), j) =>
-        acc.put(pairId,
-          (r.getLong(3 * j), r.getLong(3 * j + 1), r.getLong(3 * j + 2)))
-      }
-    }
-    val rows = pairs.zipWithIndex.map { case ((x, y), i) =>
-      val (n, ascV, descV) = acc.get(i)
+    val p = partitionsOr(df.sparkSession, partitions)
+    val measured = perOnColumn(pairs, 3)(orderDependencyAggMulti(df, _, _, p))
+    val rows = pairs.zip(measured).map { case ((x, y), Seq(n, ascV, descV)) =>
       val label =
         if (ascV == 0L && descV == 0L) "both"
         else if (ascV == 0L) "asc"
@@ -1910,9 +1657,42 @@ object KeyDiscovery {
         else "none"
       Row(x, y, n, ascV, descV, label)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), orderDependencySchema)
+    localFrame(df.sparkSession, rows, orderDependencySchema)
   }
+
+  /** The pair batching every OD/SD measure shares (r16 optimization):
+    * pairs group by on-column, and ONE shared collapse + carry job per
+    * distinct x (`agg(x, ys)`, one output row holding `width` Longs per
+    * y in ys order) computes every one of its y verdicts at once;
+    * distinct on-columns run as concurrent driver jobs (an m-column
+    * sweep drops from m·(m−1) grouped-extrema pipelines to m). Returns
+    * each pair's `width` Longs in pair order.
+    */
+  private def perOnColumn(pairs: Seq[(String, String)], width: Int)(
+      agg: (String, Seq[String]) => DataFrame): Seq[Seq[Long]] = {
+    val byX = byOnColumn(pairs)
+    val heads = runConcurrently(byX) { case (x, iys) =>
+      agg(x, iys.map(_._2)).head() }
+    val of = byX.zip(heads).flatMap { case ((_, iys), r) =>
+      iys.zipWithIndex.map { case ((pairId, _), j) =>
+        pairId -> (0 until width).map(k => r.getLong(width * j + k))
+      }
+    }.toMap
+    pairs.indices.map(of)
+  }
+
+  /** Pairs grouped by on-column: (x, [(pair index, y)]). */
+  private def byOnColumn(pairs: Seq[(String, String)])
+      : Seq[(String, Seq[(Int, String)])] =
+    pairs.zipWithIndex.map { case ((x, y), i) => (x, i, y) }
+      .groupBy(_._1).toSeq
+      .map { case (x, g) => (x, g.map(t => (t._2, t._3))) }
+
+  /** The range-partition count of the OD/SD plans: the caller's, else
+    * the session's shuffle partitions. */
+  private def partitionsOr(spark: SparkSession, partitions: Int): Int =
+    if (partitions > 0) partitions
+    else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   /** STAGED schema-wide OD sweep — the [[discoverInds]] treatment for
     * the fourth family member: every ordered (on, ordered) pair over
@@ -1944,39 +1724,30 @@ object KeyDiscovery {
       cs.foreach(c => require(df.columns.contains(c),
         s"column '$c' not in table '$t'"))
     }
-    val spark = tables.head._2.sparkSession
     // r17: the per-(table, chunk) calls are EAGER and independent —
     // serializing them left the box idle between tables (q167 ran three
     // orderDependencies calls back-to-back; the r16 driver bench read it
     // 20–43% slower than the r15 per-pair-concurrent geometry). One
     // fan-out over every (table, chunk) unit restores end-to-end overlap
     // on top of the batched per-x plans; output order is unchanged
-    // (units land in a slot array, flattened in declaration order).
+    // (results come back in unit order, flattened in declaration order).
     val units = tables.flatMap { case (t, df, cs) =>
       val pairs = for (x <- cs; y <- cs if x != y) yield (x, y)
       pairs.grouped(MaxCandidates).map(chunk => (t, df, chunk)).toSeq
     }
-    val slots = new Array[Seq[Row]](units.size)
-    graft.util.Concurrency.runConcurrently(units.indices) { i =>
-      val (t, df, chunk) = units(i)
-      slots(i) = orderDependencies(df, chunk, partitions).collect()
-        .map(r => Row(t, r.getString(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getString(5))).toSeq
-    }
-    val out = slots.toSeq.flatten
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
+    val out = runConcurrently(units) { case (t, df, chunk) =>
+      orderDependencies(df, chunk, partitions).collect().toSeq
+        .map(r => Row.fromSeq(t +: r.toSeq))
+    }.flatten
+    localFrame(tables.head._2.sparkSession, out,
       StructType(StructField("table", StringType, nullable = false) +:
         orderDependencySchema.fields.toSeq))
   }
 
-  private val orderDependencySchema = StructType(Seq(
-    StructField("on_column", StringType, nullable = false),
-    StructField("ordered_column", StringType, nullable = false),
-    StructField("n_groups", LongType, nullable = false),
-    StructField("asc_violations", LongType, nullable = false),
-    StructField("desc_violations", LongType, nullable = false),
-    StructField("monotone", StringType, nullable = false)))
+  private val orderDependencySchema = schema("on_column" -> StringType,
+    "ordered_column" -> StringType, "n_groups" -> LongType,
+    "asc_violations" -> LongType, "desc_violations" -> LongType,
+    "monotone" -> StringType)
 
   /** APPROXIMATE order dependencies — the dirty-data form completing
     * the profiling matrix (keys/FDs have g₃, INDs have coverage-θ; ODs
@@ -2024,27 +1795,12 @@ object KeyDiscovery {
       Seq(x, y).foreach(c => require(df.columns.contains(c),
         s"column '$c' not in frame"))
     }
-    val spark = df.sparkSession
-    val p =
-      if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // same by-x batching as the exact form: one shared adjacent-carry
     // job per distinct on-column
-    val byX: Seq[(String, Seq[(Int, String)])] =
-      pairs.zipWithIndex.map { case ((x, y), i) => (x, i, y) }
-        .groupBy(_._1).toSeq
-        .map { case (x, g) => (x, g.map(t => (t._2, t._3))) }
-    val acc =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-    graft.util.Concurrency.runConcurrently(byX) { case (x, iys) =>
-      val r = adjacentOrderViolationAggMulti(df, x, iys.map(_._2), p).head()
-      iys.zipWithIndex.foreach { case ((pairId, _), j) =>
-        acc.put(pairId,
-          (r.getLong(3 * j), r.getLong(3 * j + 1), r.getLong(3 * j + 2)))
-      }
-    }
-    val rows = pairs.zipWithIndex.map { case ((x, y), i) =>
-      val (n, ascV, descV) = acc.get(i)
+    val p = partitionsOr(df.sparkSession, partitions)
+    val measured = perOnColumn(pairs, 3)(
+      adjacentOrderViolationAggMulti(df, _, _, p))
+    val rows = pairs.zip(measured).map { case ((x, y), Seq(n, ascV, descV)) =>
       val den = math.max(n - 1, 1L).toDouble
       val (ascE, descE) = (ascV / den, descV / den)
       val label =
@@ -2054,8 +1810,7 @@ object KeyDiscovery {
         else "none"
       Row(x, y, n, ascV, descV, ascE, descE, label)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
+    localFrame(df.sparkSession, rows,
       StructType(orderDependencySchema.fields.patch(5, Seq(
         StructField("asc_error", DoubleType, nullable = false),
         StructField("desc_error", DoubleType, nullable = false)), 0)))
@@ -2146,12 +1901,8 @@ object KeyDiscovery {
         s"ordered column '$y' must be numeric for gap arithmetic — " +
           "derive one (e.g. epoch seconds) first")
     }
-    val spark = df.sparkSession
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        sequentialDependencyRows(df, pairs, minGap, maxGap, epsilon,
-          partitions), 1),
-      sequentialDependencySchema)
+    localFrame(df.sparkSession, sequentialDependencyRows(df, pairs, minGap,
+      maxGap, epsilon, partitions), sequentialDependencySchema)
   }
 
   /** The driver-side verdict rows behind [[sequentialDependencies]] —
@@ -2163,43 +1914,22 @@ object KeyDiscovery {
                                        minGap: Double, maxGap: Double,
                                        epsilon: Double,
                                        partitions: Int): Seq[Row] = {
-    val spark = df.sparkSession
-    val p =
-      if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // pairs batched by on-column (r16 optimization): one shared
-    // collapse + carry + aggregation job per distinct x computes every
-    // one of its y verdicts at once; distinct on-columns still run as
-    // concurrent driver jobs. A 12-pair sweep over one table drops from
-    // 12 grouped-extrema pipelines to (#distinct x) of them.
-    val byX: Seq[(String, Seq[(Int, String)])] =
-      pairs.zipWithIndex.map { case ((x, y), i) => (x, i, y) }
-        .groupBy(_._1).toSeq
-        .map { case (x, g) => (x, g.map(t => (t._2, t._3))) }
-    val acc = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long)]()
-    graft.util.Concurrency.runConcurrently(byX) { case (x, iys) =>
-      val r = adjacentGapViolationAggMulti(df, x, iys.map(_._2),
-        minGap, maxGap, p).head()
-      iys.zipWithIndex.foreach { case ((pairId, _), j) =>
-        acc.put(pairId, (r.getLong(2 * j), r.getLong(2 * j + 1)))
-      }
-    }
-    pairs.zipWithIndex.map { case ((x, y), i) =>
-      val (n, viol) = acc.get(i)
+    // a 12-pair sweep over one table runs (#distinct x) grouped-extrema
+    // pipelines, not 12
+    val p = partitionsOr(df.sparkSession, partitions)
+    val measured = perOnColumn(pairs, 2)(
+      adjacentGapViolationAggMulti(df, _, _, minGap, maxGap, p))
+    pairs.zip(measured).map { case ((x, y), Seq(n, viol)) =>
       val error = viol / math.max(n - 1, 1L).toDouble
       Row(x, y, minGap, maxGap, n, viol, error, error <= epsilon)
     }
   }
 
-  private val sequentialDependencySchema = StructType(Seq(
-    StructField("on_column", StringType, nullable = false),
-    StructField("ordered_column", StringType, nullable = false),
-    StructField("min_gap", DoubleType, nullable = false),
-    StructField("max_gap", DoubleType, nullable = false),
-    StructField("n_groups", LongType, nullable = false),
-    StructField("violations", LongType, nullable = false),
-    StructField("error", DoubleType, nullable = false),
-    StructField("holds", BooleanType, nullable = false)))
+  private val sequentialDependencySchema = schema(
+    "on_column" -> StringType, "ordered_column" -> StringType,
+    "min_gap" -> DoubleType, "max_gap" -> DoubleType,
+    "n_groups" -> LongType, "violations" -> LongType,
+    "error" -> DoubleType, "holds" -> BooleanType)
 
   /** Schema-wide SEQUENTIAL-DEPENDENCY sweep — the
     * [[discoverOrderDependencies]] treatment for the Golab et al.
@@ -2233,15 +1963,13 @@ object KeyDiscovery {
     val tablePairs = tables.map { case (t, df, cs) =>
       (t, df, seqDepCandidatePairs(t, df, cs))
     }
-    val spark = tables.head._2.sparkSession
     val out = tablePairs.flatMap { case (t, df, pairs) =>
       pairs.grouped(MaxCandidates).flatMap { chunk =>
         sequentialDependencyRows(df, chunk, minGap, maxGap, epsilon,
           partitions).map(r => Row.fromSeq(t +: r.toSeq))
       }
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
+    localFrame(tables.head._2.sparkSession, out,
       StructType(StructField("table", StringType, nullable = false) +:
         sequentialDependencySchema.fields.toSeq))
   }
@@ -2334,9 +2062,7 @@ object KeyDiscovery {
           "derive one (e.g. epoch seconds) first")
     }
     val spark = df.sparkSession
-    val p =
-      if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val p = partitionsOr(spark, partitions)
     // the complement in DECIMAL, not binary doubles: 1 - 0.07 reads
     // 0.9299999999999999 in IEEE, which shifts an exact-rank hit into
     // an interpolation and breaks bit parity with a 0.93-written oracle
@@ -2348,11 +2074,7 @@ object KeyDiscovery {
     // 12 single-pair walks over events measured 10.5 s standalone where
     // this shape reads ~1.5 s, with bit-identical output (same gap
     // arithmetic, same walk, same interpolation)
-    val byX: Seq[(String, Seq[(Int, String)])] =
-      pairs.zipWithIndex.map { case ((x, y), i) => (x, i, y) }
-        .groupBy(_._1).toSeq
-        .map { case (x, g) => (x, g.map(t => (t._2, t._3))) }
-    val melted = byX.map { case (x, iys) =>
+    val melted = byOnColumn(pairs).map { case (x, iys) =>
       val g = withAdjacentPredecessorsMulti(
         groupedExtremaMulti(df, x, iys.map(_._2), p), x, iys.size)
       val units = iys.zipWithIndex.flatMap { case ((pairId, _), j) =>
@@ -2388,13 +2110,10 @@ object KeyDiscovery {
       .agg(max(when(col("__side") === "lo", col("n"))).as("__n"),
         max(when(col("__side") === "lo", col(pLoName))).as("__g1"),
         max(when(col("__side") === "hi", col(pHiName))).as("__g2"))
-    val pairsLit = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pairs.zipWithIndex.map { case ((x, y), i) => Row(i, x, y) }, 1),
-      StructType(Seq(
-        StructField("__pair", IntegerType, nullable = false),
-        StructField("on_column", StringType, nullable = false),
-        StructField("ordered_column", StringType, nullable = false))))
+    val pairsLit = localFrame(spark,
+      pairs.zipWithIndex.map { case ((x, y), i) => Row(i, x, y) },
+      schema("__pair" -> IntegerType, "on_column" -> StringType,
+        "ordered_column" -> StringType))
     pairsLit.join(pivoted, Seq("__pair"), "left")
       .select(col("on_column"), col("ordered_column"),
         coalesce(col("__n"), lit(0L)).as("n_adjacent"),

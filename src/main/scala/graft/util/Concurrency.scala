@@ -1,26 +1,31 @@
 package graft.util
 
-/** The one shared driver-side fan-out helper: run independent Spark jobs
-  * concurrently (Spark schedules concurrent jobs fine; each job shuffles
-  * to executors on its own). Latency of k small jobs drops from sum to
-  * ~max. Used by describe's per-column group jobs, inference's per-table
-  * stats, and dependence's per-pair contingencies.
+/** The one driver-side fan-out: run independent units (each typically
+  * one or more eager Spark jobs) concurrently and return their results
+  * in input order. Spark schedules concurrent jobs fine, so the latency
+  * of k small jobs drops from their sum to about their max.
+  *
+  * Contract, per call:
+  *   - a FRESH pool of at most 8 threads. Fresh threads inherit the
+  *     caller's Spark local properties (scheduler pool, job
+  *     descriptions, any per-call tags a tracer keys on), which a shared
+  *     long-lived pool would not;
+  *   - one job group shared by every unit of the call;
+  *   - on the first failure the group is cancelled, so sibling Spark
+  *     jobs still running stop instead of burning executors, the pool is
+  *     interrupted, and that failure is rethrown.
+  *
+  * `setJobGroup` is thread-local, so tagging happens inside each unit;
+  * because pool threads are fresh per call, no group leaks across calls.
   */
 object Concurrency {
-  def runConcurrently[A](items: Seq[A])(work: A => Unit): Unit = {
-    if (items.isEmpty) return
+  def runConcurrently[A, B](items: Seq[A])(work: A => B): Seq[B] = {
+    if (items.isEmpty) return Nil
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(items.size, 8))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // every unit runs under one shared job group so the error path can
-    // cancel the SIBLING Spark jobs still running (r16 ADVICE:
-    // Future.sequence rethrows the first failure while the pool's
-    // graceful shutdown() would let orphaned jobs burn executors to
-    // completion). setJobGroup is thread-local, so tagging happens
-    // inside each unit, and pool threads are fresh per call — no group
-    // leaks across calls.
     val sc = org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext)

@@ -1,0 +1,65 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import graft.util.Concurrency.runConcurrently
+
+/** The driver-side fan-out contract: ordered results, fail-fast with
+  * sibling-job cancellation, and per-call threads that inherit the
+  * caller's Spark local properties.
+  */
+class ConcurrencySpec extends SparkSpec {
+  // the fan-out looks up the session when called, so create it first
+  private lazy val sc = spark.sparkContext
+
+  test("results come back in input order when units finish out of order") {
+    val finished = new ConcurrentLinkedQueue[Int]()
+    val items = Seq(4, 3, 2, 1)
+    val out = runConcurrently(items) { i =>
+      Thread.sleep(i * 150L)
+      finished.add(i)
+      s"unit-$i"
+    }
+    assert(out == items.map(i => s"unit-$i"))
+    assert(finished.asScala.toSeq == items.reverse,
+      "the units should have finished in reverse input order")
+    assert(runConcurrently(Seq.empty[Int])(identity).isEmpty)
+  }
+
+  test("a failing unit rethrows and cancels its sibling Spark jobs") {
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      runConcurrently(Seq(0, 1)) {
+        case 0 =>
+          // fail only once the sibling's job is running
+          val deadline = System.nanoTime() + 20000000000L
+          while (sc.statusTracker.getActiveJobIds.isEmpty &&
+              System.nanoTime() < deadline) Thread.sleep(20)
+          throw new IllegalStateException("unit 0 failed")
+        case _ =>
+          sc.parallelize(1 to 4, 4).map { i => Thread.sleep(60000); i }
+            .count()
+      }
+    }
+    assert(e.getMessage == "unit 0 failed")
+    // cancellation is asynchronous: the cancelled job leaves the tracker
+    // within moments, far before its 60 s tasks could finish
+    val deadline = System.nanoTime() + 20000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert((System.nanoTime() - t0) / 1e9 < 45.0)
+  }
+
+  test("a local property set on the caller thread is visible inside units") {
+    val key = "graft.spec.layer"
+    sc.setLocalProperty(key, "caller")
+    try {
+      assert(runConcurrently(1 to 3)(_ => sc.getLocalProperty(key)) ==
+        Seq("caller", "caller", "caller"))
+    } finally sc.setLocalProperty(key, null)
+  }
+}

@@ -26,20 +26,8 @@ class KeyDiscoverySpec extends SparkSpec {
     assert(out("grp") == ((5L, 3L, 0L, false)))
   }
 
-  test("fdAgg (scanOnce) batches every pair measure over ONE table scan; paths agree") {
-    import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-    val fd = KeyDiscovery.fdAgg(df, Seq("id" -> "grp", "grp" -> "id",
-      "grp" -> "grp_val", "grp_val" -> "grp"))
-    assert(fd.queryExecution.optimizedPlan.collect {
-      case l: LeafNode => l }.size == 1)
-    val cols = Seq("id", "grp", "grp_val")
-    val jobs = KeyDiscovery.functionalDependencies(df, cols)
-      .collect().map(_.toSeq).toSeq
-    val batched = KeyDiscovery.functionalDependencies(df, cols,
-      scanOnce = true).collect().map(_.toSeq).toSeq
-    assert(jobs == batched)
-    // and each per-pair job prunes to its two columns
-    val scanned = KeyDiscovery.pairProfileAgg(df, "grp" -> "grp_val")
+  test("per-pair FD jobs prune to the pair's two columns") {
+    val scanned = KeyDiscovery.tupleFdAgg(df, Seq("grp"), "grp_val")
       .queryExecution.optimizedPlan.collectLeaves()
       .flatMap(_.output).map(_.name).toSet
     assert(scanned.subsetOf(Set("grp", "grp_val")), s"scanned: $scanned")
@@ -96,25 +84,11 @@ class KeyDiscoverySpec extends SparkSpec {
     assert(out("grp,id") == ((2, 5L, 5L, 0L, true)))
   }
 
-  test("discoverKeys(maxArity=2): singles + pairs, lattice order; scanOnce parity") {
+  test("discoverKeys(maxArity=2): singles + pairs, lattice order") {
     val out = KeyDiscovery.discoverKeys(df, Seq("id", "grp", "grp_val"))
     val names = out.collect().map(_.getString(0)).toSeq
     assert(names == Seq("id", "grp", "grp_val",
       "id,grp", "id,grp_val", "grp,grp_val"))
-    // the scanOnce=true Expand path (scan-bound-cluster alternative) and
-    // the default concurrent-jobs path must agree row for row
-    val tuples = Seq(Seq("id"), Seq("grp"), Seq("id", "grp"),
-      Seq("grp", "grp_val"))
-    val jobs = KeyDiscovery.compositeCandidateKeys(df, tuples)
-      .collect().map(_.toSeq).toSeq
-    val batched = KeyDiscovery.compositeCandidateKeys(df, tuples,
-      scanOnce = true).collect().map(_.toSeq).toSeq
-    assert(jobs == batched)
-    // and the batched path really is one scan
-    import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-    val agg = KeyDiscovery.compositeKeyAgg(df, tuples)
-    assert(agg.queryExecution.optimizedPlan.collect {
-      case l: LeafNode => l }.size == 1)
   }
 
   test("discoverKeysStaged prunes supersets of found keys, agrees on the key set") {
@@ -556,26 +530,21 @@ class KeyDiscoverySpec extends SparkSpec {
     assert(!out3.exists(_.getInt(4) == 2))
   }
 
-  test("scanOnce + Screen.Auto stays exact on any frame size (no data-dependent crash)") {
-    // an explicit scanOnce must win over Auto: the alternative-plans
-    // guard is a static API contract, not a size-triggered failure
+  test("Screen.Auto resolves from the measured frame's estimate") {
+    // Auto reads the optimizer estimate of the frame it is given: a
+    // 100-row limit of a source past the threshold measures exactly
     val big = spark.range(40L * 1000 * 1000)
       .select(col("id"), pmod(col("id"), lit(1000)).as("grp"))
     assert(big.queryExecution.optimizedPlan.stats.sizeInBytes >=
       BigInt(KeyDiscovery.AutoScreenBytes))
+    assert(big.limit(100).queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(KeyDiscovery.AutoScreenBytes))
     val r = KeyDiscovery.compositeCandidateKeys(big.limit(100),
-      Seq(Seq("grp")), scanOnce = true,
-      screen = KeyDiscovery.Screen.Auto).head()
+      Seq(Seq("grp")), screen = KeyDiscovery.Screen.Auto).head()
     assert(r.getBoolean(6)) // exact path taken
     val fd = KeyDiscovery.functionalDependencies(big.limit(100),
-      Seq("id", "grp"), scanOnce = true,
-      screen = KeyDiscovery.Screen.Auto).head()
+      Seq("id", "grp"), screen = KeyDiscovery.Screen.Auto).head()
     assert(fd.getBoolean(5)) // is_exact
-    // the static misuse (explicit Hll + scanOnce) still refuses loudly
-    intercept[IllegalArgumentException] {
-      KeyDiscovery.compositeCandidateKeys(big.limit(100), Seq(Seq("grp")),
-        scanOnce = true, screen = KeyDiscovery.Screen.Hll)
-    }
   }
 
   test("approximateFunctionalDependencies: g3 equals the removed-row " +

@@ -66,6 +66,28 @@ class OpsSpec extends SparkSpec {
     assert((10 to 19).forall(i => out(s"c$i") == "c10"))
   }
 
+  test("duplicateClusters releases every materialization it supersedes") {
+    val sc = spark.sparkContext
+    // compared as id sets: the ContextCleaner may drop OTHER suites'
+    // leftovers meanwhile, so "no new persisted RDD" is the exact check
+    def persisted = sc.getPersistentRDDs.keySet
+    // driver union-find path: the result is driver values, nothing stays
+    val before = persisted
+    Dedup.duplicateClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_1", "id_2"))
+      .collect()
+    assert((persisted -- before).isEmpty)
+    // distributed rounds (string ids; the 10-node chain needs more than
+    // maxIter = 3 rounds): only the returned labels stay persisted, and
+    // releasing them restores the starting set
+    val chain = (10 until 19).map(i => (s"c$i", s"c${i + 1}"))
+      .toDF("id_1", "id_2")
+    val out = Dedup.duplicateClusters(chain, maxIter = 3)
+    assert(out.collect().length == 10)
+    assert((persisted -- before).size == 1)
+    Dedup.release(out)
+    assert((persisted -- before).isEmpty)
+  }
+
   test("deduplicate keeps one representative per near-dup cluster") {
     val out = Dedup.deduplicate(docs, "doc_id", "text", threshold = 0.5)
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -124,7 +124,7 @@ re-spend a round on them. Full numbers in BENCH_SF1.md §"Round-9 probes".
    ~2 s for 30 narrow CONCURRENT sketch jobs at sf0.1: 30 interpreted
    HLL updates per row in one stage lose to 30 pruned codegen scans
    that overlap in the scheduler. Same jobs-beat-batched result as the
-   exact-distinct Expand (ProbeQ139/ProbeFd) — the screen now runs as
+   exact-distinct Expand (q139/q129, BENCH_SF1.md) — the screen now runs as
    concurrent per-candidate jobs (ProbeScreen).
 
 4. **`percentile_approx` as describe's scale path (r11).** The approx

@@ -26,15 +26,9 @@ object ProbeOd177 {
     def perPair(): Unit = {
       val ev = Queries.table(spark, dir, "events")
       val k = stats.KeyDiscovery
-      val parts = new Array[DataFrame](3)
-      graft.util.Concurrency.runConcurrently(0 until 3) {
-        case 0 => parts(0) = k.approximateOrderDependencies(ev,
-          Seq("event_id" -> "ts"), epsilon = 0.02)
-        case 1 => parts(1) = k.approximateOrderDependencies(ev,
-          Seq("event_id" -> "value"), epsilon = 0.02)
-        case _ => parts(2) = k.approximateOrderDependencies(ev,
-          Seq("user_id" -> "value"), epsilon = 0.02)
-      }
+      val parts = graft.util.Concurrency.runConcurrently(Seq(
+          "event_id" -> "ts", "event_id" -> "value", "user_id" -> "value"))(
+        pair => k.approximateOrderDependencies(ev, Seq(pair), epsilon = 0.02))
       run(parts.reduce(_ unionAll _).orderBy("on_column", "ordered_column"))
     }
     run(q177()); perPair()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * The fused shape must put every column's bucket assignment in one scan,
   * which in Spark means an explode/Expand carrying k (cid, bucket, value)
   * tuples per input row — the same melt geometry the per-column jobs beat
-  * 3× for modes (meltStatsFull) and 3–7× for key profiles (ProbeQ139).
+  * 3× for modes (meltStatsFull) and 3–7× for key profiles (q139, BENCH_SF1.md).
   * The counter-argument for fusion is scheduler round-trips: the walk runs
   * 2–3 LEVELS per column with a driver sync per level, so 20 columns × 3
   * levels = ~60 small jobs vs ~3 fused jobs. This probe measures which

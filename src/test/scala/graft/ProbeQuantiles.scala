@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev probe: decompose exact describe's cost at scale — the sort-free
@@ -30,7 +30,7 @@ object ProbeQuantiles {
     stats.Describe.exactQuantiles(df, targets)
     val q = (1 to 3).map(_ => t(stats.Describe.exactQuantiles(df, targets))).min
     // melt: the per-column value-groupBy (nunique + mode shape)
-    def melt(): Unit = graft.util.Concurrency.runConcurrently(numCols) { c =>
+    def melt(): Seq[Row] = graft.util.Concurrency.runConcurrently(numCols) { c =>
       df.select(col(c).cast("double").as("v")).where(col("v").isNotNull)
         .groupBy("v").agg(count(lit(1)).as("cnt"))
         .agg(min(struct((-col("cnt")).as("negCnt"), col("v"))),

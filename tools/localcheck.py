@@ -1,7 +1,9 @@
 import duckdb, json, math, sys, glob, os
 # Local replica of the driver's correctness compare: runs each oracle SQL in
 # DuckDB over the sf tables, loads the graft.Verify parquet dump, and
-# compares row counts, sorted-column schemas, and value hashes. Usage:
+# compares row counts, sorted-column schemas, and value hashes. A query with
+# no parquet dump counts as a failure; the exit status is 1 when any query
+# fails. Usage:
 #   python3 tools/localcheck.py /tmp/verify_out /root/testdata/sf0.01 [q_filter]
 out = sys.argv[1] if len(sys.argv) > 1 else '/tmp/verify_out'
 sf = sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.01'
@@ -32,6 +34,9 @@ for q in sorted(oracle):
         odf = con.execute(oracle[q]).df()
     except Exception as e:
         print(f'{q}: ORACLE SQL ERROR: {e}'); fails += 1; continue
+    if not glob.glob(f'{out}/{q}/*.parquet'):
+        print(f'{q}: MISSING dump (the query failed or wrote nothing)')
+        fails += 1; continue
     sdf = duckdb.sql(f"SELECT * FROM '{out}/{q}/*.parquet'").df()
     cols_o, cols_s = sorted(odf.columns), sorted(sdf.columns)
     if cols_o != cols_s:
@@ -46,3 +51,4 @@ for q in sorted(oracle):
         print(f'{q}: HASH mismatch, first diffs (oracle, spark): {diff}'); fails += 1; continue
     ok += 1
 print(f'ok={ok} fail={fails}')
+sys.exit(1 if fails else 0)
