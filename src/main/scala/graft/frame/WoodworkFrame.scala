@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import graft.infer.TypeInference
 import graft.schema.{SchemaMetadata, WwColumnSchema, WwTableSchema}
 import graft.types.{LogicalType, TypeSystem}
+import graft.util.{Ranks, WorkingSet}
 
 /** The engine's table abstraction: a Spark DataFrame plus woodwork-style
   * typing information (reference: WoodworkTableAccessor,
@@ -291,25 +292,17 @@ final case class WoodworkFrame(df: DataFrame, schema: WwTableSchema,
     // ordinal follows the within-partition sort because the projection sits
     // above the Sort node, so (pid, mid - (pid << 33)) is (partition, local
     // position) without any window exchange
-    val tagged = arranged
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .cache()
-    try {
-      val partCounts = tagged.groupBy("__pid").agg(count(lit(1)).as("__c"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val sortedPids = partCounts.keys.toSeq.sorted
-      val prefix = sortedPids.scanLeft(0L)((acc, p) => acc + partCounts(p))
-      val offsetOf = sortedPids.zip(prefix).toMap
-      val offExpr = sortedPids.foldLeft(lit(0L)) { (acc, p) =>
-        when(col("__pid") === p, lit(offsetOf(p))).otherwise(acc)
-      }
+    WorkingSet.scoped { ws =>
+      val tagged = ws.cache(arranged
+        .withColumn("__pid", spark_partition_id())
+        .withColumn("__mid", monotonically_increasing_id()))
+      val (offExpr, _) = Ranks.partitionOffsets(tagged, lit(1L))
       val pos = offExpr +
         (col("__mid") - shiftleft(col("__pid").cast(LongType), 33))
       val slice = tagged.where(pos >= from && pos < until)
         .drop("__pid", "__mid")
       WoodworkFrame(slice.localCheckpoint(eager = true), schema)
-    } finally tagged.unpersist()
+    }
   }
 
   /** Single-row positional lookup (reference: indexers.py:52-96). */

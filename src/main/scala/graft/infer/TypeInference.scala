@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.config.WwConfig
 import graft.types.{ColStats, LogicalType, TypeSystem}
 import graft.util.Concurrency.runConcurrently
+import graft.util.WorkingSet
 
 /** Distributed logical-type inference.
   *
@@ -180,21 +181,18 @@ object TypeInference {
     * type_system.py:101,349-358); tables at or below the bound are used whole,
     * which pins exact reproducibility at test scale.
     */
-  def collectStats(df: DataFrame, cols: Seq[String]): Map[String, ColStats] = {
-    val (stats, _, cleanup) = collectStatsWithSample(df, cols)
-    cleanup()
-    stats
-  }
+  def collectStats(df: DataFrame, cols: Seq[String]): Map[String, ColStats] =
+    WorkingSet.scoped(ws => collectStatsWithSample(ws, df, cols)._1)
 
-  /** Returns the stats, the (cached) sample frame for follow-up jobs (the NL
-    * pass reuses it), and a cleanup thunk that releases ONLY the cache this
-    * call created — when no sampling occurred and the caller had already
-    * persisted `df`, the caller's cache is left untouched.
+  /** Returns the stats and the sample frame, cached in `ws`, for follow-up
+    * jobs (the NL and learned-datetime passes reuse it). Without sampling
+    * the sample is `df` itself, so a caller's cache on `df` is reused and
+    * left in place.
     */
   private def collectStatsWithSample(
-      df: DataFrame,
-      cols: Seq[String]): (Map[String, ColStats], DataFrame, () => Unit) = {
-    if (cols.isEmpty) return (Map.empty, df, () => ())
+      ws: WorkingSet, df: DataFrame,
+      cols: Seq[String]): (Map[String, ColStats], DataFrame) = {
+    if (cols.isEmpty) return (Map.empty, df)
     val sampleSize = WwConfig.options.inferenceSampleSize
     val total = df.count()
     // Above the bound, Bernoulli sampling lands within ~1% of the reference's
@@ -205,10 +203,7 @@ object TypeInference {
       if (total > sampleSize)
         df.sample(withReplacement = false, sampleSize.toDouble / total, 42)
       else df
-    val ownCache = base.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val sampled = if (ownCache) base.cache() else base
-    val cleanup: () => Unit =
-      if (ownCache) () => { sampled.unpersist(); () } else () => ()
+    val sampled = ws.cache(base)
     sampled.count() // ONE full-table scan materializes the bounded sample
     val fields = df.schema.fields.filter(f => cols.contains(f.name))
     // One SMALL agg per column, run concurrently over the cached sample:
@@ -220,7 +215,7 @@ object TypeInference {
       sampled.agg(statExprs(f.name, f.dataType)).head())
     (fields.zip(rows).map { case (f, r) =>
       f.name -> rowToStats(r, 0, f.dataType)
-    }.toMap, sampled, cleanup)
+    }.toMap, sampled)
   }
 
   /** Mean common-word count per cell for one column over the sample
@@ -243,8 +238,8 @@ object TypeInference {
   def inferTypes(df: DataFrame, cols: Seq[String] = Nil,
                  ts: TypeSystem = TypeSystem.global): Map[String, LogicalType] = {
     val target = if (cols.isEmpty) df.columns.toSeq else cols
-    val (stats, sampled, cleanup) = collectStatsWithSample(df, target)
-    try {
+    WorkingSet.scoped { ws =>
+      val (stats, sampled) = collectStatsWithSample(ws, df, target)
       val first = stats.map { case (n, st) => n -> ts.inferFromStats(st) }
       // deferred learned-datetime pass: a string column whose every non-null
       // value is date-SHAPED but which the fixed format cascade could not
@@ -278,6 +273,6 @@ object TypeInference {
         val avgWords = nlAvgCommonWords(sampled, n, stats(n).nonNullCount)
         n -> ts.inferFromStats(stats(n).copy(nlAvgCommonWords = avgWords))
       }
-    } finally cleanup()
+    }
   }
 }

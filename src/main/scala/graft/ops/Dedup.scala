@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.WorkingSet
+
 /** Deduplication operators for training-data pipelines, each designed as
   * shuffle-conscious distributed plans:
   *
@@ -96,26 +98,29 @@ object Dedup {
     // join-based set algebra on the exploded shingle table: intersections
     // come from a shingle-equality self-join (shuffle key = shingle), set
     // sizes from a groupBy — no array HOFs anywhere
-    val sh = shingleTable(df, idCol, textCol, n).cache()
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("a").join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .agg(count(lit(1)).as("inter"))
-    // exhaustive pair frame over the (small) per-doc size table so
-    // zero-overlap pairs keep a 0.0 jaccard (API parity with thresholds ≤ 0)
-    val pairs = sizes.as("x").join(sizes.as("y"), col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_1"), col("y.id").as("id_2"),
-        col("x.sz").as("sz1"), col("y.sz").as("sz2"))
-    val j = (col("inter").cast(DoubleType)) /
-      ((col("sz1") + col("sz2")).cast(DoubleType) - col("inter").cast(DoubleType))
-    val out = pairs.join(inter, Seq("id_1", "id_2"), "left")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
-      .select(col("id_1"), col("id_2"), round(j, 4).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-    // materialize the (small) pair result, then free the cached shingle
-    // table — repeated dedup calls must not accumulate executor cache blocks
-    try out.localCheckpoint(eager = true) finally sh.unpersist()
+    WorkingSet.scoped { ws =>
+      val sh = ws.cache(shingleTable(df, idCol, textCol, n))
+      val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
+      val inter = sh.as("a").join(sh.as("b"),
+          col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
+        .groupBy(col("a.id").as("id_1"), col("b.id").as("id_2"))
+        .agg(count(lit(1)).as("inter"))
+      // exhaustive pair frame over the (small) per-doc size table so
+      // zero-overlap pairs keep a 0.0 jaccard (API parity with thresholds ≤ 0)
+      val pairs = sizes.as("x").join(sizes.as("y"), col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_1"), col("y.id").as("id_2"),
+          col("x.sz").as("sz1"), col("y.sz").as("sz2"))
+      val j = (col("inter").cast(DoubleType)) /
+        ((col("sz1") + col("sz2")).cast(DoubleType) - col("inter").cast(DoubleType))
+      val out = pairs.join(inter, Seq("id_1", "id_2"), "left")
+        .withColumn("inter", coalesce(col("inter"), lit(0L)))
+        .select(col("id_1"), col("id_2"), round(j, 4).as("jaccard"))
+        .where(col("jaccard") >= threshold)
+      // materialize the (small) pair result before the scope frees the
+      // cached shingle table — repeated dedup calls must not accumulate
+      // executor cache blocks
+      out.localCheckpoint(eager = true)
+    }
   }
 
   /** MinHash signatures: `numHashes` permutations derived from TWO base
@@ -269,21 +274,20 @@ object Dedup {
     * neighbors from the prior round — so convergence takes O(log diameter)
     * to O(diameter) rounds. Near-dup clusters are shallow (variants link
     * through hub documents); `maxIter` bounds adversarial chains. Lineage
-    * is truncated per round (localCheckpoint) so the iterative plan cannot
-    * grow without bound; the result is EAGER like the other pair ops.
-    * Every materialization the call makes is released as soon as a later
-    * one supersedes it: the driver-side path returns driver values and
-    * leaves nothing persisted, the distributed path leaves only the
-    * returned labels.
+    * is truncated per round (an eager local checkpoint) so the iterative
+    * plan cannot grow without bound; the result is EAGER like the other
+    * pair ops. Each round's checkpoint is released once the next one
+    * supersedes it: the driver-side path returns driver values and leaves
+    * nothing persisted, the distributed path leaves only the returned
+    * labels.
     */
   def duplicateClusters(pairs: DataFrame, idCol1: String = "id_1",
                         idCol2: String = "id_2",
-                        maxIter: Int = 20): DataFrame = {
+                        maxIter: Int = 20): DataFrame = WorkingSet.scoped { ws =>
     // materialize the pair set ONCE before the size probe: without this,
     // a >bound pair set would run the (expensive) upstream pair pipeline
     // twice — once for the probe collect, again for the distributed rounds
-    val e0 = pairs.select(col(idCol1).as("a"), col(idCol2).as("b"))
-      .localCheckpoint(true)
+    val e0 = ws.checkpoint(pairs.select(col(idCol1).as("a"), col(idCol2).as("b")))
     // near-dup pair sets are tiny relative to the corpus (every pair IS a
     // duplicate); below the bound a driver-side union-find replaces ~10
     // tiny Spark jobs (edge checkpoint + per-round join/agg/count) with one
@@ -315,55 +319,40 @@ object Dedup {
         }
         parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
       }
-      release(e0)
+      ws.release(e0)
       val ids = head.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
       val spark = pairs.sparkSession
       import spark.implicits._
-      return ids.map(id => (id, find(id))).toSeq
-        .toDF("id", "cluster_id")
+      ids.map(id => (id, find(id))).toSeq.toDF("id", "cluster_id")
+    } else {
+      val edges = ws.checkpoint(
+        e0.union(e0.select(col("b").as("a"), col("a").as("b"))).distinct())
+      ws.release(e0)
+      // round 0: every node takes min(self, smallest direct neighbor)
+      var labels = ws.checkpoint(edges.groupBy(col("a").as("id"))
+        .agg(min(col("b")).as("nbr"))
+        .select(col("id"), least(col("id"), col("nbr")).as("label")))
+      var iter = 0
+      var changed = 1L
+      while (changed > 0 && iter < maxIter) {
+        val nbrMin = edges
+          .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
+          .groupBy(col("a").as("id")).agg(min(col("lb")).as("nbrLabel"))
+        val next = ws.checkpoint(labels
+          .join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nbrLabel"), col("label")))
+              .as("label"),
+            col("label").as("prev")))
+        changed = next.where(col("label") =!= col("prev")).count()
+        ws.release(labels)
+        labels = next
+        iter += 1
+      }
+      ws.release(edges)
+      ws.escape(labels).select(col("id"), col("label").as("cluster_id"))
     }
-    val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint(eager = true)
-    release(e0)
-    // round 0: every node takes min(self, smallest direct neighbor)
-    var labels = edges.groupBy(col("a").as("id"))
-      .agg(min(col("b")).as("nbr"))
-      .select(col("id"), least(col("id"), col("nbr")).as("label"))
-      .localCheckpoint(eager = true)
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("b"), col("label").as("lb")), "b")
-        .groupBy(col("a").as("id")).agg(min(col("lb")).as("nbrLabel"))
-      val next = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbrLabel"), col("label")))
-            .as("label"),
-          col("label").as("prev"))
-        .localCheckpoint(eager = true)
-      changed = next.where(col("label") =!= col("prev")).count()
-      release(labels)
-      labels = next.drop("prev")
-      iter += 1
-    }
-    release(edges)
-    labels.select(col("id"), col("label").as("cluster_id"))
   }
-
-  /** Drops the blocks behind a local checkpoint the caller no longer
-    * reads: a checkpointed frame's plan is a `LogicalRDD` over the
-    * persisted RDD, which otherwise outlives the call until the
-    * ContextCleaner collects it. The removal blocks, so it completes
-    * inside the call instead of overlapping the caller's next jobs.
-    */
-  private[graft] def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = true)
-      case _ =>
-    }
 
   /** Text-level cross-corpus decontamination: corpus documents that
     * NEAR-DUPLICATE any benchmark document — the MinHash sibling of the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.WorkingSet
+
 /** Event-sequence analytics over an (actor, timestamp, event-type) log —
   * the product-analytics family every training-data/event pipeline ends up
   * re-implementing: ordered-funnel conversion (optionally with a
@@ -216,8 +218,8 @@ object EventAnalytics {
     * n_pairs = 0 with null quantiles.
     *
     * EAGER at call time (the [[funnel]] contract): the quantile walk's
-    * driver rounds run inside this call — a persist/unpersist cycle on
-    * the actor-progress frame, returning a bounded local relation.
+    * driver rounds run inside this call over the actor-progress frame,
+    * cached for the call's duration, returning a bounded local relation.
     */
   def funnelStepTiming(df: DataFrame, actorCol: String, tsCol: String,
                        typeCol: String, steps: Seq[String],
@@ -228,12 +230,12 @@ object EventAnalytics {
     val spark = df.sparkSession
     val prog = actorProgress(df, actorCol, tsCol, typeCol, steps,
       windowSeconds, segmentSeconds)
-    val deltas = prog.select((2 to k).map { i =>
-      when(size(col("__adv")) >= i,
-        (element_at(col("__adv"), i) - element_at(col("__adv"), i - 1))
-          .cast(DoubleType) / 1e6).as(s"__d$i")
-    }: _*).persist()
-    try {
+    WorkingSet.scoped { ws =>
+      val deltas = ws.cache(prog.select((2 to k).map { i =>
+        when(size(col("__adv")) >= i,
+          (element_at(col("__adv"), i) - element_at(col("__adv"), i - 1))
+            .cast(DoubleType) / 1e6).as(s"__d$i")
+      }: _*))
       val statCols = (2 to k).flatMap(i => Seq(
         count(col(s"__d$i")), min(col(s"__d$i")), max(col(s"__d$i"))))
       val statRow = deltas.agg(statCols.head, statCols.tail: _*).head()
@@ -262,7 +264,7 @@ object EventAnalytics {
           StructField("n_pairs", LongType, nullable = false),
           StructField("p50_seconds", DoubleType, nullable = true),
           StructField("p90_seconds", DoubleType, nullable = true))))
-    } finally deltas.unpersist()
+    }
   }
 
   /** Dimensional inter-step timing — [[funnelStepTiming]] grouped by a

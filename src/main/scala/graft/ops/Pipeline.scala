@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.WorkingSet
+
 /** End-to-end corpus curation: the standard pretraining front door — rule
   * gate → PII scrub → exact dedup → quality annotation — composed from the
   * individual operators so one call produces a training-ready corpus plus
@@ -89,43 +91,41 @@ object Pipeline {
                     bench: DataFrame, benchIdCol: String, benchTextCol: String,
                     minWords: Long = 50L, nearDupThreshold: Double = 0.6,
                     crossThreshold: Double = 0.5,
-                    budget: Long = 512L): DataFrame = {
+                    budget: Long = 512L): DataFrame = WorkingSet.scoped { ws =>
     val spark = corpus.sparkSession
     import spark.implicits._
     val s0 = corpus.select(col(idCol).as("id"), col(sourceCol).as("source"),
       col(textCol).as("text"))
     // every stage feeds multiple downstream actions (its own stat + the
     // next stage), so each expensive transform — the Gopher rule gate, the
-    // fingerprint window, the MinHash clustering — is persisted to run
-    // ONCE; without this the gate alone re-evaluates ~5x across the report
-    val s1 = s0.where(TextAnalysis.gopherPass(col("text"), minWords))
-      .persist()
+    // fingerprint window, the MinHash clustering — is cached to run ONCE;
+    // without this the gate alone re-evaluates ~5x across the report
+    val s1 = ws.cache(s0.where(TextAnalysis.gopherPass(col("text"), minWords)))
     val w = Window.partitionBy(TextAnalysis.fingerprint(col("text")))
       .orderBy(col("id"))
-    val s2t = s1.withColumn("__rn", row_number().over(w))
+    val s2t = ws.cache(s1.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
-      .withColumn("__tok", TextAnalysis.tokenCount(col("text")))
-      .persist()
+      .withColumn("__tok", TextAnalysis.tokenCount(col("text"))))
     // ONE ww_minhash bucket pass serves BOTH near-dup stages (r17): the
     // keep-best LSH self-join reads it whole, and decontamination reads
     // the survivor subset (bandBuckets is per-row, so filtering to s3's
     // ids equals rebuilding buckets over s3) — formerly each stage
     // re-tokenized and re-hashed the corpus
-    val buckets = Dedup.bandBuckets(s2t, "id", "text", n = 3,
-      numHashes = 64, bands = 32).persist()
+    val buckets = ws.cache(Dedup.bandBuckets(s2t, "id", "text", n = 3,
+      numHashes = 64, bands = 32))
     val pairs = Dedup.minhashLshPairsFromBuckets(s2t, buckets, "id", "text",
       n = 3, threshold = nearDupThreshold)
     val s3 = Dedup.deduplicateKeepBestFromPairs(s2t, pairs, "id", "__tok")
     val benchStd = bench.select(col(benchIdCol).as("id"),
       col(benchTextCol).as("text"))
-    val s3c = s3.persist()
+    val s3c = ws.cache(s3)
     val s3Buckets = buckets.join(s3c.select(col("id")), Seq("id"),
       "left_semi")
     val contaminated = Dedup.crossMinhashMatchesFromBuckets(s3c, s3Buckets,
         benchStd, "id", "text", n = 3, numHashes = 64, bands = 32,
         crossThreshold)
       .select(col("corpus_id").as("id")).distinct()
-    val s4 = s3c.join(contaminated, Seq("id"), "left_anti").persist()
+    val s4 = ws.cache(s3c.join(contaminated, Seq("id"), "left_anti"))
     val packed = Packing.packByCumsum(s4, "id", "__tok", budget,
       shardCol = Some("source"))
 
@@ -141,36 +141,31 @@ object Pipeline {
         coalesce(sum(col("__tok")), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    try {
-      // the input stat is the one stage-independent job — overlap it with
-      // the (inherently serial: each stat materializes the next stage's
-      // cached input) chain (r17, guide §2.6)
-      var in: (Long, Long) = (0L, 0L)
-      var rest: Seq[(Int, String, (Long, Long))] = Nil
-      graft.util.Concurrency.runConcurrently(Seq(0, 1)) {
-        case 0 => in = stat(s0)
-        case _ =>
-          val g = stat(s1)
-          val e = statTok(s2t)
-          val nb = statTok(s3c)
-          val de = statTok(s4)
-          val packRow = {
-            val r = packed.agg(countDistinct(col("pack_id")),
-              coalesce(sum(col("__tok")), lit(0L))).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          rest = Seq((1, "gated", g), (2, "exact_dedup", e),
-            (3, "neardup_keep_best", nb), (4, "decontaminated", de),
-            (5, "packed", packRow))
-      }
-      val rows = (0, "input", in) +: rest
-      rows.map { case (o, n, (d, t)) => (o, n, d, t) }
-        .toDF("stage_order", "stage", "docs", "tokens")
-        .orderBy("stage_order")
-    } finally {
-      s4.unpersist(); s3c.unpersist(); buckets.unpersist()
-      s2t.unpersist(); s1.unpersist()
+    // the input stat is the one stage-independent job — overlap it with
+    // the (inherently serial: each stat materializes the next stage's
+    // cached input) chain (r17, guide §2.6)
+    var in: (Long, Long) = (0L, 0L)
+    var rest: Seq[(Int, String, (Long, Long))] = Nil
+    graft.util.Concurrency.runConcurrently(Seq(0, 1)) {
+      case 0 => in = stat(s0)
+      case _ =>
+        val g = stat(s1)
+        val e = statTok(s2t)
+        val nb = statTok(s3c)
+        val de = statTok(s4)
+        val packRow = {
+          val r = packed.agg(countDistinct(col("pack_id")),
+            coalesce(sum(col("__tok")), lit(0L))).head()
+          (r.getLong(0), r.getLong(1))
+        }
+        rest = Seq((1, "gated", g), (2, "exact_dedup", e),
+          (3, "neardup_keep_best", nb), (4, "decontaminated", de),
+          (5, "packed", packRow))
     }
+    val rows = (0, "input", in) +: rest
+    rows.map { case (o, n, (d, t)) => (o, n, d, t) }
+      .toDF("stage_order", "stage", "docs", "tokens")
+      .orderBy("stage_order")
   }
 
   /** Per-source curation funnel: how many documents entered, passed the

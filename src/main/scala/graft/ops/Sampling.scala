@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.{Ranks, WorkingSet}
+
 /** Deterministic sampling and dataset splitting for training-data pipelines.
   *
   * Everything here is a pure projection or filter on a content hash of the
@@ -272,33 +274,25 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism, 4)
-    val base = df.select(col(idCol).as("id"), col(scoreCol).as("score"))
-      .repartitionByRange(parts, col("score"), col("id"))
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    try {
-      val partCounts = base.groupBy(col("__pid"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val n = partCounts.values.sum
-      if (n == 0L) return base.select(col("id"), col("score"),
+    WorkingSet.scoped { ws =>
+      val base = ws.cache(df.select(col(idCol).as("id"), col(scoreCol).as("score"))
+        .repartitionByRange(parts, col("score"), col("id"))
+        .withColumn("__pid", spark_partition_id()))
+      val (offExpr, n) = Ranks.partitionOffsets(base, lit(1L))
+      if (n == 0L) base.select(col("id"), col("score"),
         lit(0L).as("rank"), lit(0L).as("bin")).where(lit(false))
-      val sortedPids = partCounts.keys.toSeq.sorted
-      val prefix = sortedPids.scanLeft(0L)((acc, p) => acc + partCounts(p))
-      val offsetOf = sortedPids.zip(prefix).toMap
-      val offExpr = sortedPids.foldLeft(lit(0L)) { (acc, p) =>
-        when(col("__pid") === p, lit(offsetOf(p))).otherwise(acc)
+      else {
+        val w = Window.partitionBy(col("__pid"))
+          .orderBy(col("score"), col("id"))
+        // exact while rank·bins < 2^53 (IEEE double); fine for any real corpus
+        base
+          .withColumn("rank",
+            row_number().over(w).cast(LongType) - 1 + offExpr)
+          .select(col("id"), col("score"), col("rank"),
+            floor(col("rank") * lit(bins) / lit(n.toDouble)).cast(LongType)
+              .as("bin"))
+          .localCheckpoint(true)
       }
-      val w = Window.partitionBy(col("__pid"))
-        .orderBy(col("score"), col("id"))
-      // exact while rank·bins < 2^53 (IEEE double); fine for any real corpus
-      base
-        .withColumn("rank",
-          row_number().over(w).cast(LongType) - 1 + offExpr)
-        .select(col("id"), col("score"), col("rank"),
-          floor(col("rank") * lit(bins) / lit(n.toDouble)).cast(LongType)
-            .as("bin"))
-        .localCheckpoint(true)
-    } finally base.unpersist()
+    }
   }
 }

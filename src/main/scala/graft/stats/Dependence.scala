@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.frame.WoodworkFrame
 import graft.util.Concurrency.runConcurrently
+import graft.util.{Ranks, WorkingSet}
 
 /** Pairwise column dependence: Pearson, Spearman, adjusted mutual information,
   * and their signed max (reference: `df.ww.dependence`,
@@ -44,18 +45,6 @@ object Dependence {
     (norm, calc, calcMax)
   }
 
-  /** Distributed average-rank lookup table (value → avg rank) for one
-    * column. Shape: per-value counts (one shuffle) → range partition by
-    * value → per-partition cumulative counts (parallel windows) + partition
-    * offsets computed from P driver-side scalars. Equal values land in one
-    * range partition, so tie groups never split. Produces exactly the
-    * classic `rank() + (count_same-1)/2` average ranks without the
-    * single-partition global-sort window.
-    *
-    * Returns the rank table plus a cleanup thunk that unpersists the cached
-    * per-value counts — call it after the LAST action consuming the table
-    * (repeated dependence calls must not accumulate cached blocks).
-    */
   /** Distinct-value count below which the rank table's prefix sums run as one
     * single-task window over the (already-reduced) per-value counts — no
     * second shuffle, no driver offsets, no cache. Above it, the
@@ -73,43 +62,41 @@ object Dependence {
     */
   private[stats] val HeapSampleBound = 1L * 1000 * 1000
 
-  private[stats] def avgRankTable(df: DataFrame, v: String,
-                                  nuniqueHint: Option[Long] = None)
-      : (DataFrame, () => Unit) = {
+  /** Distributed average-rank lookup table (value → avg rank) for one
+    * column. Shape: per-value counts (one shuffle) → range partition by
+    * value → per-partition cumulative counts (parallel windows) + partition
+    * offsets computed from P driver-side scalars. Equal values land in one
+    * range partition, so tie groups never split. Produces exactly the
+    * classic `rank() + (count_same-1)/2` average ranks without the
+    * single-partition global-sort window.
+    *
+    * The range path caches its per-value counts in `ws`, so the table
+    * stays valid until that scope exits: open the scope around the last
+    * action that reads the table.
+    */
+  private[stats] def avgRankTable(ws: WorkingSet, df: DataFrame, v: String,
+                                  nuniqueHint: Option[Long] = None): DataFrame = {
+    val perValue = df.where(col(v).isNotNull)
+      .groupBy(col(v).as("__v")).agg(count(lit(1)).as("__c"))
     if (nuniqueHint.exists(_ <= SingleTaskBound)) {
-      val counts = df.where(col(v).isNotNull)
-        .groupBy(col(v).as("__v")).agg(count(lit(1)).as("__c"))
       val w = Window.orderBy(col("__v"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      val table = counts
+      return perValue
         .withColumn("__cumLess", coalesce(sum(col("__c")).over(w), lit(0L)))
         .select(col("__v"),
           (col("__cumLess") + (col("__c") + 1) / 2.0).as("__avg_rank"))
-      return (table, () => ())
     }
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 4)
-    val counts = df.where(col(v).isNotNull)
-      .groupBy(col(v).as("__v")).agg(count(lit(1)).as("__c"))
+    val parts = math.max(df.sparkSession.sparkContext.defaultParallelism, 4)
+    val counts = ws.cache(perValue
       .repartitionByRange(parts, col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    val partSums = counts.groupBy("__pid").agg(sum("__c").as("s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // prefix sums: offset(p) = Σ counts of partitions < p (P driver scalars)
-    val sortedPids = partSums.keys.toSeq.sorted
-    val prefix = sortedPids.scanLeft(0L)((acc, p) => acc + partSums(p))
-    val offsetOf = sortedPids.zip(prefix).toMap
-    val offExpr = sortedPids.foldLeft(lit(0L)) { (acc, p) =>
-      when(col("__pid") === p, lit(offsetOf(p))).otherwise(acc)
-    }
+      .withColumn("__pid", spark_partition_id()))
+    val (offExpr, _) = Ranks.partitionOffsets(counts, col("__c"))
     val w = Window.partitionBy("__pid").orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val table = counts
+    counts
       .withColumn("__cumLess", coalesce(sum(col("__c")).over(w), lit(0L)))
       .select(col("__v"),
         (col("__cumLess") + offExpr + (col("__c") + 1) / 2.0).as("__avg_rank"))
-    (table, () => { counts.unpersist(); () })
   }
 
   /** Named single-measure variants (reference API surface:
@@ -224,9 +211,8 @@ object Dependence {
         else prepped.sample(withReplacement = false, n.toDouble / total, 0)
       case None => prepped
     }
-    val prep = df0.cache()
-
-    try {
+    WorkingSet.scoped { ws =>
+      val prep = ws.cache(df0)
       val numericSet = allCols.filter { n =>
         val c = schema(n)
         c.isNumeric || c.isDatetime || c.isBoolean ||
@@ -350,9 +336,9 @@ object Dependence {
             nullFree.exists(r => r.col1 == n || r.col2 == n))
           // each rank table runs a small driver-side action; build them
           // concurrently so k tables cost ~one table of wall-clock
-          val rankTables = runConcurrently(rankedCols)(n =>
-            n -> avgRankTable(prep, n, Some(nunique(n))))
-          try {
+          WorkingSet.scoped { tables =>
+            val rankTables = runConcurrently(rankedCols)(n =>
+              n -> avgRankTable(tables, prep, n, Some(nunique(n))))
             // join each rank table back by value; tables up to ~2M rows
             // (known from the pass-1 nunique) broadcast — a rank-table row
             // is two 8-byte values, so 2M rows ≈ 32 MB of data, well under
@@ -361,7 +347,7 @@ object Dependence {
             // column's value (r17: the former 100k bound pushed sf0.1's
             // near-unique price column into a base-frame sort-merge join).
             // Genuinely high-cardinality columns still shuffle.
-            val ranked = rankTables.foldLeft(prep) { case (d, (n, (rt0, _))) =>
+            val ranked = rankTables.foldLeft(prep) { case (d, (n, rt0)) =>
               val rt = if (nunique(n) <= 2000000) broadcast(rt0) else rt0
               d.join(rt, d(n) === rt("__v"), "left")
                 .drop("__v").withColumnRenamed("__avg_rank", s"rk__$n")
@@ -376,18 +362,16 @@ object Dependence {
               r.spearman = v * r.sharedRows / r.unionRows
               caller.update(1)
             }
-          } finally rankTables.foreach(_._2._2())
+          }
         }
         runConcurrently(withNulls) { r =>
           // ranks on the pair's shared rows, same distributed rank shape
           val sub = prep.select(col(r.col1), col(r.col2))
             .where(col(r.col1).isNotNull && col(r.col2).isNotNull)
-          val (ra0, cleanA) = avgRankTable(sub, r.col1)
-          val (rb0, cleanB) = avgRankTable(sub, r.col2)
-          try {
-            val ra = ra0
+          WorkingSet.scoped { tables =>
+            val ra = avgRankTable(tables, sub, r.col1)
               .withColumnRenamed("__avg_rank", "ra").withColumnRenamed("__v", "__va")
-            val rb = rb0
+            val rb = avgRankTable(tables, sub, r.col2)
               .withColumnRenamed("__avg_rank", "rb").withColumnRenamed("__v", "__vb")
             val rr = sub
               .join(ra, col(r.col1) === col("__va"))
@@ -396,7 +380,7 @@ object Dependence {
             val v = if (rr.isNullAt(0)) Double.NaN else rr.getDouble(0)
             r.spearman = v * r.sharedRows / r.unionRows
             caller.update(1)
-          } finally { cleanA(); cleanB() }
+          }
         }
       }
 
@@ -489,7 +473,7 @@ object Dependence {
       }
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), StructType(fields))
-    } finally prep.unpersist()
+    }
   }
 }
 

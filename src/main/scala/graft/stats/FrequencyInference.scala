@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.frame.WoodworkFrame
+import graft.util.WorkingSet
 
 /** Temporal frequency inference for datetime columns
   * (reference: `df.ww.infer_temporal_frequencies`,
@@ -77,12 +78,11 @@ object FrequencyInference {
     // sorted-series diffs, independent of partition count.
     val spark = df.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism, 4)
-    val withPid = df.where(c.isNotNull)
-      .select(unix_micros(c.cast("timestamp")).as("us"))
-      .repartitionByRange(parts, col("us"))
-      .withColumn("pid", spark_partition_id())
-      .cache()
-    val (counts, observed) = try {
+    val (counts, observed) = WorkingSet.scoped { ws =>
+      val withPid = ws.cache(df.where(c.isNotNull)
+        .select(unix_micros(c.cast("timestamp")).as("us"))
+        .repartitionByRange(parts, col("us"))
+        .withColumn("pid", spark_partition_id()))
       val inner = withPid
         .withColumn("diff", col("us") -
           lag(col("us"), 1).over(Window.partitionBy("pid").orderBy("us")))
@@ -100,15 +100,13 @@ object FrequencyInference {
         else inner.unionAll(boundary.toDF("diff"))
       // one scan: group the deltas, then both the top delta and the total
       // observed count come from the (tiny) grouped result
-      val grouped = all.groupBy("diff").agg(count(lit(1)).as("cnt")).cache()
-      try {
-        // deterministic winner: highest count, then SMALLEST delta
-        val top = grouped.orderBy(col("cnt").desc, col("diff").asc)
-          .limit(5).collect()
-        val obs = grouped.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
-        (top, obs)
-      } finally grouped.unpersist()
-    } finally withPid.unpersist()
+      val grouped = ws.cache(all.groupBy("diff").agg(count(lit(1)).as("cnt")))
+      // deterministic winner: highest count, then SMALLEST delta
+      val top = grouped.orderBy(col("cnt").desc, col("diff").asc)
+        .limit(5).collect()
+      val obs = grouped.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
+      (top, obs)
+    }
     if (counts.isEmpty || observed == 0)
       return FreqResult(colName, None, 0.0, observed)
     val (bestDelta, bestCnt) = (counts.head.getLong(0), counts.head.getLong(1))

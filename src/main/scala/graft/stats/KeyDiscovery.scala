@@ -43,7 +43,7 @@ import graft.util.Concurrency.runConcurrently
   * probability < 3·10⁻⁷). Screened-out candidates report the HLL
   * estimate (±rsd) as `n_distinct` with `is_exact = false` — the schema
   * itself marks which rows are sketch estimates; candidates that survive
-  * the screen carry exact counts and an exact verdict. ProbeScreen at sf0.1
+  * the screen carry exact counts and an exact verdict. Measured at sf0.1
   * (30-candidate lineitem lattice): 19/30 exact jobs skipped, shuffle
   * volume collapses to the confirms — wall-clock parity locally (the
   * in-memory shuffle is cheap at one box), the savings are wire bytes.
@@ -373,7 +373,7 @@ object KeyDiscovery {
 
   /** HLL screen-then-exact-confirm profile (object doc: APPROX SCREEN).
     * The screen runs as concurrent per-candidate approx jobs — the same
-    * jobs-beat-batched result as the exact path (ProbeScreen measured
+    * jobs-beat-batched result as the exact path (measured:
     * the one-scan 30-sketch aggregate at ~9 s vs ~2 s for 30 narrow
     * concurrent sketch jobs at sf0.1: 30 interpreted HLL updates per row
     * in one stage lose to 30 pruned codegen scans that overlap). Either
@@ -1348,7 +1348,7 @@ object KeyDiscovery {
     * estimates by n²/2⁶⁵ — and a holding pair still can never be
     * refuted, since enc(A) ⊆ enc(B) holds under ANY shared deterministic
     * encoding). Hashing instead of concatenating is a measured ~3× on
-    * the per-side sketch aggregation at 100× (ProbeSketchCost:
+    * the per-side sketch aggregation at 100× (measured:
     * interpreted per-row string building inside the ObjectHashAggregate
     * was the cost — 9.9 s vs 3.5 s for 5 sketches over 60M rows) — the
     * [[screenTupleAgg]] choice, re-made here.
@@ -1626,7 +1626,7 @@ object KeyDiscovery {
     * grouped frame, no comparison leaves Spark's own type ordering, and
     * the one global window runs over AT MOST `partitions` rows. The
     * carry-in branch reads the grouped frame back through AQE's
-    * ReusedExchange (verified in the final adaptive plan — ProbeOdPlan),
+    * ReusedExchange (verified in the final adaptive plan),
     * so raw rows are scanned and aggregated exactly once per pair.
     * Pairs run as concurrent jobs (the object doc's measured-faster
     * geometry).

@@ -7,16 +7,36 @@ import org.apache.spark.sql.functions._
 /** Global 0-based row numbering that never serializes an unbounded input
   * into one window task — the shared machinery behind every
   * "rank the distinct-value table" site (frequency encoding, vocabulary
-  * ordinals). Describe/Dependence use the same two-regime shape for their
-  * order-statistic prefix sums.
+  * ordinals), and the per-partition offsets behind every range-partitioned
+  * position or prefix sum (`iloc`, curriculum bins, Dependence's rank
+  * tables).
   */
 object Ranks {
 
   /** Row count below which a single-task window is cheaper than the
-    * range-partitioned path (same constant as Describe/Dependence: ~1M
-    * slim rows ≈ 10s-of-MB heaps per task).
+    * range-partitioned path: ~1M slim rows ≈ 10s-of-MB heaps per task.
+    * Each caller of [[partitionOffsets]] keeps its own bound
+    * (Dependence's rank tables switch at 64k distinct values).
     */
   val SingleTaskBound: Long = 1L * 1000 * 1000
+
+  /** Global start offset of each range partition of a `__pid`-tagged
+    * frame: one collect of the per-`__pid` sums of `weight` (`lit(1L)`
+    * to count rows), a prefix scan over them on the driver, folded into
+    * a `__pid` → offset column. Returns that column and the total
+    * weight. P driver scalars, never a single-task global window.
+    */
+  private[graft] def partitionOffsets(tagged: DataFrame,
+                                      weight: Column): (Column, Long) = {
+    val sums = tagged.groupBy("__pid").agg(sum(weight))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val pids = sums.keys.toSeq.sorted
+    val prefix = pids.scanLeft(0L)((acc, p) => acc + sums(p))
+    val offset = pids.zip(prefix).foldLeft(lit(0L)) { case (acc, (p, o)) =>
+      when(col("__pid") === p, lit(o)).otherwise(acc)
+    }
+    (offset, prefix.last)
+  }
 
   /** Append `rankCol` = the global 0-based row number of each row under
     * `ordering` (a total order — include a tiebreaker column).
@@ -50,14 +70,7 @@ object Ranks {
       val parts = math.max(df.sparkSession.sparkContext.defaultParallelism, 4)
       val gn = mapping.repartitionByRange(parts, ordering: _*)
         .withColumn("__pid", spark_partition_id())
-      val partCounts = gn.groupBy("__pid").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val pids = partCounts.keys.toSeq.sorted
-      val prefix = pids.scanLeft(0L)((acc, p) => acc + partCounts(p))
-      val offsetOf = pids.zip(prefix).toMap
-      val offExpr = pids.foldLeft(lit(0L)) { (acc, p) =>
-        when(col("__pid") === p, lit(offsetOf(p))).otherwise(acc)
-      }
+      val (offExpr, _) = partitionOffsets(gn, lit(1L))
       val w = Window.partitionBy("__pid").orderBy(ordering: _*)
       gn.withColumn(rankCol,
           (row_number().over(w) - 1).cast("long") + offExpr)

@@ -84,7 +84,7 @@ class OpsSpec extends SparkSpec {
     val out = Dedup.duplicateClusters(chain, maxIter = 3)
     assert(out.collect().length == 10)
     assert((persisted -- before).size == 1)
-    Dedup.release(out)
+    graft.util.WorkingSet.release(out)
     assert((persisted -- before).isEmpty)
   }
 
