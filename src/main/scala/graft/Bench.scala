@@ -56,9 +56,16 @@ import java.nio.file.{Files, Paths}
   * full line can fit the tail any more (r16 VERDICT: PERF totals have
   * been null since r10). The bench therefore ends stdout with a SECOND,
   * compact line — {metric, value, unit, action, n_queries, calib,
-  * total_norm, polluted, detail, sf}, ~350 chars, no per-query map — so
-  * the tail always closes on one complete JSON object; per-query seconds
-  * live in the full line (stdout + BENCH_LINE.json) and BENCH_DETAIL.json.
+  * total_norm, polluted, n_failed, detail, sf}, ~350 chars, no per-query
+  * map — so the tail always closes on one complete JSON object; per-query
+  * seconds live in the full line (stdout + BENCH_LINE.json) and
+  * BENCH_DETAIL.json.
+  *
+  * FAILURES: a query that throws in any run is reported as failed, not
+  * timed — `"failed": true` and the exception class in the detail file,
+  * left out of `total` and the per-query map, counted in `n_failed` on
+  * both stdout lines. The process exits 1 after writing its artifacts
+  * when any query failed.
   *
   * CROSS-SESSION calibration (r9): within-session spread is controlled by
   * the escalation above, but r7 vs r8 showed the whole SESSION can run
@@ -185,8 +192,7 @@ object Bench {
       // toRdd.count(): executes the query's OWN plan (every output column
       // computed, sorts retained) without collecting rows to the driver —
       // a count() on top would let Catalyst prune the final projections
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
+      fn(spark, sfDir).queryExecution.toRdd.count()
       (System.nanoTime() - t0) / 1e9
     }
     val spreadLimit = sys.env.getOrElse("SPARK_GRAFT_SPREAD_LIMIT", "1.5").toDouble
@@ -210,7 +216,8 @@ object Bench {
     case class QRes(name: String, value: Double, spread: Double,
                     warm: Double, timed: Seq[Double], escalated: Boolean,
                     polluted: Boolean, loadavg: Double, micro: Double,
-                    retried: Boolean = false, priorRuns: Seq[Double] = Nil)
+                    retried: Boolean = false, priorRuns: Seq[Double] = Nil,
+                    failed: Option[String] = None)
     // stable window: last stableK runs agree within stableBand AND their
     // best is within stableBand of a ROBUST floor — the second-smallest
     // run, not the absolute min, so one anomalously fast outlier during a
@@ -227,22 +234,30 @@ object Bench {
         if (ok) Some(w) else None
       }
     }
+    // a query that throws in any run is FAILED: it records the exception
+    // class, no timings, and stays out of the total
     def measure(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 doWarm: Boolean): QRes = {
       val la = loadAvg()
       val mp = { microProbe(); microProbe() }   // one warm, one recorded
-      val warm = if (doWarm) time(fn) else -1.0 // untimed: codegen + warm-up
-      var timed = Seq.fill(runs)(time(fn))
-      val noisy = timed.max / math.max(timed.min, 1e-9) > spreadLimit
-      var win = if (noisy) stableWindow(timed) else Some(timed)
-      while (noisy && win.isEmpty && timed.size < maxRuns) {
-        timed = timed :+ time(fn)
-        win = stableWindow(timed)
+      try {
+        val warm = if (doWarm) time(fn) else -1.0 // untimed: codegen + warm-up
+        var timed = Seq.fill(runs)(time(fn))
+        val noisy = timed.max / math.max(timed.min, 1e-9) > spreadLimit
+        var win = if (noisy) stableWindow(timed) else Some(timed)
+        while (noisy && win.isEmpty && timed.size < maxRuns) {
+          timed = timed :+ time(fn)
+          win = stableWindow(timed)
+        }
+        val value = win.map(_.min).getOrElse(timed.min)
+        QRes(name, value, timed.max / math.max(timed.min, 1e-9), warm, timed,
+          noisy, noisy && win.isEmpty, la, mp)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        QRes(name, 0.0, 1.0, -1.0, Nil, escalated = false, polluted = false,
+          la, mp, failed = Some(e.getClass.getName))
       }
-      val value = win.map(_.min).getOrElse(timed.min)
-      QRes(name, value, timed.max / math.max(timed.min, 1e-9), warm, timed,
-        noisy, noisy && win.isEmpty, la, mp)
     }
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) => measure(name, fn, doWarm = true)
@@ -285,10 +300,11 @@ object Bench {
     // stdout tail (3dp below 1 s, 2dp below 10 s, 1dp above)
     def rq(d: Double): String =
       if (d < 1.0) f"$d%.3f" else if (d < 10.0) f"$d%.2f" else f"$d%.1f"
-    val qs = results.map(r =>
+    val (failed, ok) = results.partition(_.failed.isDefined)
+    val qs = ok.map(r =>
       "\"" + r.name.takeWhile(_ != '_') + "\":" + rq(r.value)
     ).mkString("{", ",", "}")
-    val total = r3(results.map(_.value).sum)
+    val total = r3(ok.map(_.value).sum)
     // cap at 4 names so a badly loaded session can't push the stdout line
     // past the driver's ~2000-char tail; the full set is in the detail file
     val polluted = results.filter(_.polluted)
@@ -300,10 +316,14 @@ object Bench {
       s""""ref":$CalibRef,"ref_date":"$CalibPinnedDate",""" +
       s""""factor":${r3(factor)},"pinned":$calibPinned}"""
     val detail = results.map { r =>
-      s"""  "${r.name}": {"value": ${r3(r.value)}, """ +
-        s""""value_norm": ${r3(r.value / factor)}, """ +
-        s""""spread": ${r3(r.spread)}, """ +
-        s""""escalated": ${r.escalated}, "polluted": ${r.polluted}, """ +
+      val timing = r.failed match {
+        case Some(e) => s""""failed": true, "error": "$e", """
+        case None =>
+          s""""value": ${r3(r.value)}, "value_norm": ${r3(r.value / factor)}, """ +
+            s""""spread": ${r3(r.spread)}, """ +
+            s""""escalated": ${r.escalated}, "polluted": ${r.polluted}, """
+      }
+      s"""  "${r.name}": {$timing""" +
         s""""loadavg": ${r3(r.loadavg)}, "micro": ${r3(r.micro)}, """ +
         s""""warmup": ${r3(r.warm)}, """ +
         (if (r.retried)
@@ -321,7 +341,7 @@ object Bench {
     val line = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""action":"toRdd","calib":$calibJson,""" +
       s""""total_norm":${r3(total / factor)},""" +
-      s""""polluted":$pollutedList,""" +
+      s""""polluted":$pollutedList,"n_failed":${failed.size},""" +
       s""""queries":$qs,"sf":"$sfDir"}"""
     try Files.writeString(Paths.get(linePath), line + "\n")
     catch { case e: Throwable =>
@@ -336,9 +356,10 @@ object Bench {
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""action":"toRdd","n_queries":${results.size},""" +
       s""""calib":$calibJson,"total_norm":${r3(total / factor)},""" +
-      s""""polluted":$pollutedList,"detail":"$detailPath",""" +
-      s""""sf":"$sfDir"}"""
+      s""""polluted":$pollutedList,"n_failed":${failed.size},""" +
+      s""""detail":"$detailPath","sf":"$sfDir"}"""
     println(compact)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

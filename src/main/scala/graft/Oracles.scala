@@ -4434,8 +4434,8 @@ object Oracles {
       "q105_ivf_opq" -> q105Pinned,
       "q01_pricing_summary" -> q01,
       "q02_describe_lineitem" -> q02,
-      // q106 = q02's projection under approx=true: every projected column is
-      // exact in both modes, so the oracle is shared verbatim
+      // q106 = a projection of q02's describe, so the oracle is shared
+      // verbatim
       "q106_describe_approx" -> q02,
       "q107_image_resize" -> q107,
       "q108_video_frames" -> q108,

@@ -1581,17 +1581,14 @@ object Queries {
       .orderBy("query_id", "candidate_id")
   }
 
-  /** describe(approx=true) over the same lineitem frame and projection as
-    * q02 — the documented 100 TB default: quartiles come from
-    * percentile_approx instead of the exact order-statistics melt (the
-    * sort-shaped stage that scaled 8.6× at 30× data in BENCH_SF1). The
-    * projected columns (count/nunique/nan_count/min/max) are exact under
-    * BOTH modes, so this query shares q02's oracle verbatim and stays
-    * hash-checked while timing the approx plan.
+  /** describe over the same lineitem frame as q02, projected to
+    * count/nunique/nan_count/min/max, so it shares q02's oracle verbatim.
+    * The name is historical: the approximate quartile mode it timed is
+    * deleted (exact was faster at every measured scale, BENCH_SF1 §r11).
     */
   def q106DescribeApprox(s: SparkSession, dir: String): DataFrame = {
     val f = lineitemFrame(s, dir)
-    Describe.describe(f, include = Seq("numeric"), approx = true)
+    Describe.describe(f, include = Seq("numeric"))
       .select(
         col("column_name"), col("count").as("cnt"), col("nunique"),
         col("nan_count"), col("min").as("min_v"), col("max").as("max_v"))

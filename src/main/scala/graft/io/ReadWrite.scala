@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{JArray, JBool, JInt, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, pretty, render}
 
 import graft.frame.WoodworkFrame
 import graft.schema.{SchemaMetadata, WwColumnSchema, WwTableSchema}
@@ -186,172 +188,89 @@ object ReadWrite {
   }
 
   // ---------------------------------------------------------------- JSON
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** Typing info as woodwork-compatible JSON
     * (reference: serializers/serializer_base.py:137-185
     * `typing_info_to_dict`).
     */
   def typingInfoJson(frame: WoodworkFrame): String = {
+    def opt(o: Option[String]): JValue = o.map(JString(_)).getOrElse(JNull)
+    def strMap(m: Iterable[(String, String)]): JObject =
+      JObject(m.toList.map { case (k, v) => k -> JString(v) })
     val cols = frame.schema.columns.zipWithIndex.map { case ((n, cs), i) =>
-      val params = cs.logicalType.params.map { case (k, v) =>
-        s""""${esc(k)}": "${esc(v)}"""" }.mkString(", ")
-      s"""{"name": "${esc(n)}", "ordinal": $i,
-         |"logical_type": {"parameters": {$params}, "type": "${esc(cs.logicalType.name)}"},
-         |"physical_type": {"type": "${esc(frame.df.schema(n).dataType.simpleString)}"},
-         |"semantic_tags": [${cs.semanticTags.toSeq.sorted.map(t => s""""${esc(t)}"""").mkString(", ")}],
-         |"use_standard_tags": ${cs.useStandardTags},
-         |"description": ${cs.description.map(d => s""""${esc(d)}"""").getOrElse("null")},
-         |"origin": ${cs.origin.map(o => s""""${esc(o)}"""").getOrElse("null")},
-         |"metadata": {}}""".stripMargin.replace("\n", " ")
-    }.mkString(",\n  ")
-    val idx = frame.index.map(i => s""""${esc(i)}"""").getOrElse("null")
-    val tidx = frame.timeIndex.map(i => s""""${esc(i)}"""").getOrElse("null")
-    val name = frame.schema.name.map(n => s""""${esc(n)}"""").getOrElse("null")
-    s"""{
-       |  "schema_version": "$SchemaVersion",
-       |  "name": $name,
-       |  "index": $idx,
-       |  "time_index": $tidx,
-       |  "column_typing_info": [
-       |  $cols
-       |  ],
-       |  "loading_info": {"table_type": "spark"},
-       |  "table_metadata": {}
-       |}""".stripMargin
+      JObject(
+        "name" -> JString(n),
+        "ordinal" -> JInt(i),
+        "logical_type" -> JObject(
+          "parameters" -> strMap(cs.logicalType.params),
+          "type" -> JString(cs.logicalType.name)),
+        "physical_type" -> JObject(
+          "type" -> JString(frame.df.schema(n).dataType.simpleString)),
+        "semantic_tags" -> JArray(cs.semanticTags.toList.sorted.map(JString(_))),
+        "use_standard_tags" -> JBool(cs.useStandardTags),
+        "description" -> opt(cs.description),
+        "origin" -> opt(cs.origin),
+        "metadata" -> strMap(cs.metadata.toSeq.sorted))
+    }
+    pretty(render(JObject(
+      "schema_version" -> JString(SchemaVersion),
+      "name" -> opt(frame.schema.name),
+      "index" -> opt(frame.index),
+      "time_index" -> opt(frame.timeIndex),
+      "column_typing_info" -> JArray(cols.toList),
+      "loading_info" -> JObject("table_type" -> JString("spark")),
+      "table_metadata" -> strMap(frame.schema.metadata.toSeq.sorted))))
   }
 
   /** Parse a typing-info JSON (ours or the reference's) back to a schema.
-    * Minimal purpose-built parser over the fixed document shape — no JSON
-    * library dependency.
+    * Fields are looked up by key, so the reference's python dict field
+    * order reads the same; `name`, `index` and `time_index` come from the
+    * top-level object only.
     */
   def typingInfoFromJson(json: String): WwTableSchema = {
-    val verRe = """"schema_version"\s*:\s*"([^"]+)"""".r
-    verRe.findFirstMatchIn(json).foreach { m =>
-      val major = m.group(1).takeWhile(_ != '.')
-      if (major != SchemaVersion.takeWhile(_ != '.'))
+    val doc = SchemaMetadata.parseJson(json)
+    def str(v: JValue): Option[String] = v match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+    str(doc \ "schema_version").foreach { v =>
+      if (v.takeWhile(_ != '.') != SchemaVersion.takeWhile(_ != '.'))
         System.err.println(
-          s"[graft.io] typing info schema version ${m.group(1)} differs from $SchemaVersion")
+          s"[graft.io] typing info schema version $v differs from $SchemaVersion")
     }
-    // top-level name lives BEFORE the column array — grab it from the
-    // prefix so a column named "name" can't shadow it
-    val arrStart0 = json.indexOf("\"column_typing_info\"")
-    val tableName = """"name"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      .findFirstMatchIn(if (arrStart0 > 0) json.substring(0, arrStart0) else json)
-      .map(m => graft.schema.SchemaMetadata.unescape(m.group(1)))
-    val index = """"index"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(json).map(_.group(1))
-    val timeIndex = """"time_index"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(json).map(_.group(1))
-
-    // split column_typing_info into balanced-brace objects, then extract each
-    // field independently — field ORDER differs between our serializer and
-    // the reference's python dict ordering, so no whole-object regex.
-    val arrStart = json.indexOf("\"column_typing_info\"")
-    require(arrStart >= 0, "typing info JSON missing column_typing_info")
-    val objs = scala.collection.mutable.ListBuffer.empty[String]
-    var i = json.indexOf('[', arrStart) + 1
-    var depth = 0
-    var objStart = -1
-    var inStr = false
-    var done = false
-    while (i < json.length && !done) {
-      val ch = json.charAt(i)
-      if (inStr) { if (ch == '\\') i += 1 else if (ch == '"') inStr = false }
-      else ch match {
-        case '"' => inStr = true
-        case '{' => if (depth == 0) objStart = i; depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) { objs += json.substring(objStart, i + 1) }
-        case ']' => if (depth == 0) done = true
-        case _ =>
+    val index = str(doc \ "index")
+    val timeIndex = str(doc \ "time_index")
+    val colObjs = doc \ "column_typing_info" match {
+      case JArray(cs) => cs
+      case _ => throw new IllegalArgumentException(
+        "typing info JSON missing column_typing_info")
+    }
+    val cols = colObjs.map { obj =>
+      val name = str(obj \ "name").getOrElse(throw new IllegalArgumentException(
+        s"column object missing name: ${compact(render(obj))}"))
+      val ordinal = obj \ "ordinal" match {
+        case JInt(i) => i.toInt
+        case _ => 0
       }
-      i += 1
-    }
-
-    def strField(obj: String, key: String): Option[String] =
-      (s""""$key"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""").r
-        .findFirstMatchIn(obj)
-        .map(m => graft.schema.SchemaMetadata.unescape(m.group(1)))
-
-    // balanced-brace sub-object for a key (nested dicts break naive regexes)
-    def subObject(obj: String, key: String): Option[String] = {
-      val idx = obj.indexOf("\"" + key + "\"")
-      if (idx < 0) return None
-      val start = obj.indexOf('{', idx)
-      if (start < 0) return None
-      var d = 0; var j = start; var inS = false
-      var res: Option[String] = None
-      while (j < obj.length && res.isEmpty) {
-        val ch = obj.charAt(j)
-        if (inS) { if (ch == '\\') j += 1 else if (ch == '"') inS = false }
-        else ch match {
-          case '"' => inS = true
-          case '{' => d += 1
-          case '}' => d -= 1; if (d == 0) res = Some(obj.substring(start, j + 1))
-          case _ =>
-        }
-        j += 1
+      val lt = obj \ "logical_type"
+      val tags = obj \ "semantic_tags" match {
+        case JArray(ts) => ts.collect { case JString(t) => t }.toSet
+        case _ => Set.empty[String]
       }
-      res
-    }
-    val cols = objs.toSeq.map { obj =>
-      val name = strField(obj, "name").getOrElse(
-        throw new IllegalArgumentException(s"column object missing name: $obj"))
-      val ordinal = """"ordinal"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(obj).map(_.group(1).toInt).getOrElse(0)
-      val lt = subObject(obj, "logical_type").getOrElse("{}")
-      val ltName = """"type"\s*:\s*"([^"]+)"""".r
-        .findFirstMatchIn(lt).map(_.group(1)).getOrElse("Unknown")
-      val params = subObject(lt, "parameters")
-        .map(SchemaMetadata.parseJsonValueMap)
-        .getOrElse(Map.empty[String, String])
-      val colMeta = subObject(obj, "metadata")
-        .map(SchemaMetadata.parseJsonValueMap)
-        .getOrElse(Map.empty[String, String])
-      val tags = """"semantic_tags"\s*:\s*\[(.*?)\]""".r
-        .findFirstMatchIn(obj)
-        .map(m => """"([^"]+)"""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSet)
-        .getOrElse(Set.empty[String])
-      val ust = """"use_standard_tags"\s*:\s*(true|false)""".r
-        .findFirstMatchIn(obj).forall(_.group(1).toBoolean)
       val sysTags =
         (if (index.contains(name)) Set("index") else Set.empty[String]) ++
           (if (timeIndex.contains(name)) Set("time_index") else Set.empty[String])
       (ordinal, name, WwColumnSchema(
-        logicalType = LogicalType.fromString(ltName, params),
+        logicalType = LogicalType.fromString(
+          str(lt \ "type").getOrElse("Unknown"),
+          SchemaMetadata.valueMap(lt \ "parameters")),
         semanticTags = tags ++ sysTags,
-        useStandardTags = ust,
-        description = strField(obj, "description"),
-        origin = strField(obj, "origin"),
-        metadata = colMeta))
+        useStandardTags = obj \ "use_standard_tags" != JBool.False,
+        description = str(obj \ "description"),
+        origin = str(obj \ "origin"),
+        metadata = SchemaMetadata.valueMap(obj \ "metadata")))
     }.sortBy(_._1)
-    // table_metadata sits AFTER the column array — parse it from the
-    // suffix so column metadata objects can't shadow it
-    val tailStart = {
-      val lastObjEnd = if (objs.isEmpty) arrStart else
-        json.indexOf(']', json.indexOf(objs.last) + objs.last.length)
-      math.max(lastObjEnd, arrStart)
-    }
-    val tableMeta = {
-      val tail = json.substring(tailStart)
-      val idx = tail.indexOf("\"table_metadata\"")
-      if (idx < 0) Map.empty[String, String]
-      else {
-        val start = tail.indexOf('{', idx)
-        val end = if (start >= 0) tail.indexOf('}', start) else -1
-        if (start < 0 || end < 0) Map.empty[String, String]
-        else SchemaMetadata.parseJsonValueMap(tail.substring(start, end + 1))
-      }
-    }
-    WwTableSchema(ListMap(cols.map(c => c._2 -> c._3): _*), name = tableName,
-      metadata = tableMeta)
+    WwTableSchema(ListMap(cols.map(c => c._2 -> c._3): _*),
+      name = str(doc \ "name"),
+      metadata = SchemaMetadata.valueMap(doc \ "table_metadata"))
   }
 }

@@ -2,8 +2,13 @@ package graft.schema
 
 import scala.collection.immutable.ListMap
 
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.DeserializationFeature
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+import org.json4s.{JArray, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 import graft.types.LogicalType
 
@@ -148,6 +153,9 @@ final case class WwTableSchema(
   * key, so typing survives every Catalyst transformation and parquet
   * round-trips it natively in the footer (the Spark answer to the reference's
   * typing-info JSON sidecar, reference: serializers/serializer_base.py:137-185).
+  * Column metadata rides here too; table metadata has no field to ride on,
+  * so it travels in the sidecar, and both round-trip through
+  * `ReadWrite.toDisk`/`fromDisk` in every format.
   */
 object SchemaMetadata {
   val Key = "ww"
@@ -179,74 +187,54 @@ object SchemaMetadata {
     new MetadataBuilder().putMetadata(Key, b.build()).build()
   }
 
+  // Metadata has no key enumeration in the public API; parse its JSON.
   private def metaMap(m: Metadata, key: String): Map[String, String] =
     if (!m.contains(key)) Map.empty
-    else {
-      val mm = m.getMetadata(key)
-      // Metadata has no key enumeration in the public API; parse its JSON.
-      parseJsonMap(mm.json)
-    }
+    else parseJsonValueMap(m.getMetadata(key).json)
 
-  private[graft] def parseJsonMap(json: String): Map[String, String] = {
-    // minimal flat {"k":"v",...} parser (Metadata.json is well-formed)
-    val re = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-    re.findAllMatchIn(json).map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
-  }
-
-  /** Flat JSON object parser that also accepts the non-string values the
-    * reference serializer emits (python dicts like
-    * `{"order": [25, 33, 57]}`, `{"is_sorted": true}`): numbers and
-    * booleans keep their literal text, flat arrays join their elements
-    * with the Ordinal separator (U+001F — the same convention the Ordinal
-    * round-trip uses), and `null` entries are absent (None semantics).
+  /** The one JSON-object-to-map rule, shared by the metadata recover path,
+    * the typing-info reader and the streaming state decoders. It accepts
+    * the non-string values the reference serializer emits (python dicts
+    * like `{"order": [25, 33, 57]}`, `{"is_sorted": true}`): strings are
+    * unescaped, numbers and booleans keep their JSON text, flat arrays
+    * join their elements with the Ordinal separator (U+001F — the same
+    * convention the Ordinal round-trip uses), a nested object or array
+    * keeps its compact JSON text, and `null` entries are absent (None
+    * semantics).
     */
-  private[graft] def parseJsonValueMap(json: String): Map[String, String] = {
-    val re = ("\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*" +
-      "(\"(?:[^\"\\\\]|\\\\.)*\"|\\[[^\\]]*\\]|-?[0-9.eE+\\-]+|true|false|null)").r
-    re.findAllMatchIn(json).flatMap { m =>
-      val k = unescape(m.group(1))
-      val v = m.group(2)
-      if (v == "null") None
-      else if (v.startsWith("\""))
-        Some(k -> unescape(v.substring(1, v.length - 1)))
-      else if (v.startsWith("[")) {
-        val elems = v.substring(1, v.length - 1).split(",")
-          .map(_.trim).filter(_.nonEmpty)
-          .map(e =>
-            if (e.startsWith("\"")) unescape(e.substring(1, e.length - 1))
-            else e)
-        Some(k -> elems.mkString(graft.types.LogicalType.Ordinal.Sep))
-      }
-      else Some(k -> v)
-    }.toMap
+  private[graft] def parseJsonValueMap(json: String): Map[String, String] =
+    valueMap(parseJson(json))
+
+  /** [[parseJsonValueMap]] over a value from [[parseJson]]; anything but an
+    * object reads as empty.
+    */
+  private[graft] def valueMap(obj: JValue): Map[String, String] = {
+    def text(v: JValue): String = v match {
+      case JString(s) => s
+      case other => compact(render(other))
+    }
+    obj match {
+      case JObject(fields) => fields.collect {
+        case (k, JArray(es))
+            if !es.exists(e => e.isInstanceOf[JObject] || e.isInstanceOf[JArray]) =>
+          k -> es.map(text).mkString(graft.types.LogicalType.Ordinal.Sep)
+        case (k, v) if v != JNull => k -> text(v)
+      }.toMap
+      case _ => Map.empty
+    }
   }
 
-  /** JSON string unescape, tokenizing LEFT TO RIGHT — chained
-    * String.replace would corrupt values like "C:\\temp" (the \\t inside
-    * the escaped backslash must not become a tab). Shared by the metadata
-    * recover path and the typing-info JSON reader.
+  /** JSON text to a value through json4s' Jackson mapper. Numbers read as
+    * BigInt/BigDecimal, so integers and plain decimals keep their written
+    * text; raw control characters inside strings are accepted, because
+    * hand-written typing info carries the Ordinal separator unescaped.
     */
-  private[graft] def unescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb += '"'; i += 2
-          case '\\' => sb += '\\'; i += 2
-          case 'n' => sb += '\n'; i += 2
-          case 'r' => sb += '\r'; i += 2
-          case 't' => sb += '\t'; i += 2
-          case 'u' if i + 6 <= s.length =>
-            sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => sb += '\\'; sb += other; i += 2
-        }
-      } else { sb += c; i += 1 }
-    }
-    sb.toString
-  }
+  private[graft] def parseJson(json: String): JValue =
+    JsonMethods.mapper.readerFor(classOf[JValue])
+      .`with`(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS,
+        DeserializationFeature.USE_BIG_INTEGER_FOR_INTS)
+      .`with`(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS.mappedFeature())
+      .readValue[JValue](json)
 
   def columnFromMetadata(field: StructField): Option[WwColumnSchema] = {
     val m = field.metadata

@@ -61,18 +61,14 @@ object Describe {
   }
 
   /** Reference-parity table profile (`describe`, _get_describe_dict.py).
-    * Quartiles: the default (`approx = false`) is EXACT interpolated order
-    * statistics via the sort-free histogram walk ([[exactQuantiles]]) —
-    * since r11 this is also the FASTER path at every measured scale
-    * (150×/90M rows: exact 11.2 s vs `percentile_approx` 47.3 s, whose
-    * non-codegen ObjectHashAggregate dominates; BENCH_SF1 §r11), so exact
-    * is the right default at 100 TB too, and `approx = true` remains only
-    * for sketch-mergeable pipelines that want `percentile_approx`
-    * semantics.
+    * Quartiles are EXACT interpolated order statistics via the sort-free
+    * histogram walk ([[exactQuantiles]]) — since r11 also the FASTER path
+    * at every measured scale (150×/90M rows: exact 11.2 s vs
+    * `percentile_approx` 47.3 s, whose non-codegen ObjectHashAggregate
+    * dominates; BENCH_SF1 §r11), so there is no approximate mode.
     */
   def describe(frame: WoodworkFrame,
                include: Seq[String] = Nil,
-               approx: Boolean = false,
                callback: Option[(Long, Long, Long, String, Double) => Unit] = None)
       : DataFrame = {
     val df = frame.df
@@ -110,46 +106,13 @@ object Describe {
     // walk — never a percentile ObjectHashAggregate (whose final merge
     // holds every distinct value in one process — a non-starter at 100 TB)
     // and never a Sort node.
-    // APPROX mode (r16 optimization): its three jobs — the stat agg, the
-    // melt, and the percentile_approx agg — are INDEPENDENT (unlike the
-    // exact path, whose melt needs the stat counts for rank targets), so
-    // they run as concurrent driver jobs: latency ~max instead of sum.
-    var statOf: Map[String, Row] = null
-    var melted: (Map[String, String], Map[String, Long],
-      Map[String, Seq[Double]]) = null
-    var approxQ: Map[String, Row] = null
-    if (approx) {
-      val qExprs = numCols.map(n =>
-        n -> struct(percentile_approx(col(n).cast(DoubleType),
-          lit(Array(0.25, 0.5, 0.75)), lit(10000))).as(n))
-      runConcurrently(Seq(0, 1, 2)) {
-        case 0 => statOf = batchedStructAgg(df, aggExprs)
-        case 1 => melted = meltStatsFull(df, cols.map(_._1), Map.empty,
-          numCols.toSet)
-        case 2 => approxQ =
-          if (numCols.isEmpty) Map.empty else batchedStructAgg(df, qExprs)
-        case _ => ()
-      }
-    } else {
-      statOf = batchedStructAgg(df, aggExprs)
-      val nonNullOf: Map[String, Long] = cols.map { case (n, _) =>
-        n -> statOf(n).getLong(1)
+    val statOf = batchedStructAgg(df, aggExprs)
+    val quartileTargets: Map[String, Seq[Double]] =
+      numCols.map(n => n -> statOf(n).getLong(1)).filter(_._2 > 0).map {
+        case (n, nonNull) => n -> Seq(0.25, 0.5, 0.75).map(p => p * (nonNull - 1))
       }.toMap
-      val quartileTargets: Map[String, Seq[Double]] =
-        numCols.filter(n => nonNullOf(n) > 0).map { n =>
-          n -> Seq(0.25, 0.5, 0.75).map(p => p * (nonNullOf(n) - 1))
-        }.toMap
-      melted = meltStatsFull(df, cols.map(_._1), quartileTargets,
-        numCols.toSet)
-    }
-    val (modes, nuniques, exactQuartiles) = melted
-    val quartiles: Map[String, Seq[Double]] =
-      if (!approx) exactQuartiles
-      else if (numCols.isEmpty) Map.empty
-      else numCols.map { n =>
-        val s = approxQ(n)
-        n -> (if (s.isNullAt(0)) null else s.getSeq[Double](0))
-      }.toMap
+    val (modes, nuniques, quartiles) = meltStatsFull(df, cols.map(_._1),
+      quartileTargets, numCols.toSet)
     val spark = df.sparkSession
     // per-column progress callbacks (reference: _get_describe_dict.py:226-230)
     val caller = new graft.config.CallbackCaller(callback, "column", cols.size.toLong)

@@ -394,20 +394,20 @@ object StreamingFrame {
           s"streaming state envelope version $found is not decodable by " +
             s"this build (supported: 1..$CurrentVersion)")
 
-    private def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    import org.json4s.{JField, JInt, JLong, JObject, JString}
+    import org.json4s.jackson.JsonMethods.{compact, render}
+
+    private def payload(fields: JField*): String =
+      compact(render(JObject(fields: _*)))
     private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
     private def undo(l: String): Double =
       java.lang.Double.longBitsToDouble(l.toLong)
 
     def encodeKeyProfile(p: KeyProfile): Enveloped = Enveloped(
       CurrentVersion,
-      s"""{"key":"${esc(p.key)}","count":${p.count},"sum":${bits(p.sum)},""" +
-        s""""mean":${bits(p.mean)},"min":${bits(p.min)},"max":${bits(p.max)}}""")
+      payload("key" -> JString(p.key), "count" -> JLong(p.count),
+        "sum" -> JLong(bits(p.sum)), "mean" -> JLong(bits(p.mean)),
+        "min" -> JLong(bits(p.min)), "max" -> JLong(bits(p.max))))
 
     def decodeKeyProfile(e: Enveloped): KeyProfile = {
       val m = graft.schema.SchemaMetadata.parseJsonValueMap(e.json)
@@ -450,8 +450,9 @@ object StreamingFrame {
     def encodeFunnel(k: Int, reached: Int, lastMicros: Long,
                      anchorMicros: Long, windowSeconds: Long): Enveloped =
       Enveloped(FunnelVersion,
-        s"""{"k":$k,"reached":$reached,"last":$lastMicros,""" +
-          s""""anchor":$anchorMicros,"win":$windowSeconds}""")
+        payload("k" -> JInt(k), "reached" -> JInt(reached),
+          "last" -> JLong(lastMicros), "anchor" -> JLong(anchorMicros),
+          "win" -> JLong(windowSeconds)))
 
     /** Checkpoint funnel state written under a different conversion
       * window: `reached` indices embody deadlines that were (or were
@@ -515,7 +516,8 @@ object StreamingFrame {
     def encodeCohort(periodDays: Int, firstDay: Int,
                      lastOffset: Long): Enveloped =
       Enveloped(CohortVersion,
-        s"""{"p":$periodDays,"first":$firstDay,"last":$lastOffset}""")
+        payload("p" -> JInt(periodDays), "first" -> JInt(firstDay),
+          "last" -> JLong(lastOffset)))
 
     def decodeCohort(e: Enveloped, expectedPeriod: Int): (Int, Long) =
       e.version match {
@@ -548,11 +550,10 @@ object StreamingFrame {
 
     def encodePaths(length: Int, gapSeconds: Long,
                     evs: Seq[(Long, String)]): Enveloped = {
-      val slots = evs.zipWithIndex.map { case ((t, y), i) =>
-        s""""t$i":$t,"y$i":"${esc(y)}"""" }.mkString(",")
-      Enveloped(PathsVersion,
-        s"""{"len":$length,"gap":$gapSeconds,"n":${evs.size}""" +
-          (if (slots.isEmpty) "}" else s",$slots}"))
+      val slots = evs.zipWithIndex.flatMap { case ((t, y), i) =>
+        Seq[JField](s"t$i" -> JLong(t), s"y$i" -> JString(y)) }
+      Enveloped(PathsVersion, payload(Seq[JField]("len" -> JInt(length),
+        "gap" -> JLong(gapSeconds), "n" -> JInt(evs.size)) ++ slots: _*))
     }
 
     def decodePaths(e: Enveloped, expectedLen: Int,
@@ -577,9 +578,8 @@ object StreamingFrame {
 
     def encodeFfill(tMicros: Long, carry: Option[Double]): Enveloped =
       Enveloped(FfillVersion,
-        "{\"t\":" + tMicros +
-          carry.map(c => ",\"v\":\"" + bits(c) + "\"").getOrElse("") +
-          "}")
+        payload(("t" -> JLong(tMicros)) +:
+          carry.map(c => "v" -> JString(bits(c).toString)).toSeq: _*))
 
     def decodeFfill(e: Enveloped): (Long, Option[Double]) =
       e.version match {

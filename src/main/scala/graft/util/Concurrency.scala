@@ -10,13 +10,16 @@ package graft.util
   *     caller's Spark local properties (scheduler pool, job
   *     descriptions, any per-call tags a tracer keys on), which a shared
   *     long-lived pool would not;
-  *   - one job group shared by every unit of the call;
-  *   - on the first failure the group is cancelled, so sibling Spark
-  *     jobs still running stop instead of burning executors, the pool is
+  *   - one job tag shared by every unit of the call. A tag, not a job
+  *     group: the caller's group stays the group its units' jobs run
+  *     under, and a nested call adds its tag to every enclosing call's;
+  *   - on the first failure the jobs with the call's tag are cancelled,
+  *     so sibling Spark jobs still running stop instead of burning
+  *     executors, including jobs of nested calls; the pool is
   *     interrupted, and that failure is rethrown.
   *
-  * `setJobGroup` is thread-local, so tagging happens inside each unit;
-  * because pool threads are fresh per call, no group leaks across calls.
+  * Job tags are thread-local, so tagging happens inside each unit;
+  * because pool threads are fresh per call, no tag leaks across calls.
   */
 object Concurrency {
   def runConcurrently[A, B](items: Seq[A])(work: A => B): Seq[B] = {
@@ -29,14 +32,13 @@ object Concurrency {
     val sc = org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext)
-    val group = "graft-conc-" + java.lang.Long.toHexString(System.nanoTime())
+    val tag = "graft-conc-" + java.lang.Long.toHexString(System.nanoTime())
     try Await.result(Future.sequence(items.map(i => Future {
-      sc.foreach(_.setJobGroup(group, "graft concurrent unit",
-        interruptOnCancel = true))
+      sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
       work(i)
     })), Duration.Inf)
     catch { case e: Throwable =>
-      sc.foreach(_.cancelJobGroup(group))
+      sc.foreach(_.cancelJobsWithTag(tag))
       pool.shutdownNow()
       throw e
     }

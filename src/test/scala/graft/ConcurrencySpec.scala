@@ -54,6 +54,43 @@ class ConcurrencySpec extends SparkSpec {
     assert((System.nanoTime() - t0) / 1e9 < 45.0)
   }
 
+  test("a caller's job group is the group its units' jobs run under") {
+    sc.setJobGroup("user-group", "caller group")
+    try {
+      assert(runConcurrently(1 to 3)(_ =>
+        sc.getLocalProperty("spark.jobGroup.id")) == Seq.fill(3)("user-group"))
+    } finally sc.clearJobGroup()
+  }
+
+  test("a failing unit cancels the running job of a nested call") {
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    val e = intercept[IllegalStateException] {
+      runConcurrently(Seq(0, 1)) {
+        case 0 =>
+          val deadline = System.nanoTime() + 20000000000L
+          while (sc.statusTracker.getActiveJobIds.isEmpty &&
+              System.nanoTime() < deadline) Thread.sleep(20)
+          throw new IllegalStateException("outer unit failed")
+        case _ =>
+          // the nested call runs on a thread this unit starts, which the
+          // outer pool's interrupt never reaches: only a cancel keyed on
+          // the outer call stops its job
+          val t = new Thread(() =>
+            try runConcurrently(Seq(0)) { _ =>
+              sc.parallelize(1 to 4, 4).map { i => Thread.sleep(60000); i }
+                .count()
+            } catch { case _: Exception => () })
+          t.start()
+          t.join()
+      }
+    }
+    assert(e.getMessage == "outer unit failed")
+    val deadline = System.nanoTime() + 5000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+  }
+
   test("a local property set on the caller thread is visible inside units") {
     val key = "graft.spec.layer"
     sc.setLocalProperty(key, "caller")

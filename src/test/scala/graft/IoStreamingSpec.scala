@@ -62,8 +62,9 @@ class IoStreamingSpec extends SparkSpec {
   test("typing info JSON carries schema version, index, params") {
     val f = fixture.setTypes(Map("cat" -> LT.Ordinal(Seq("x", "y"))))
     val json = ReadWrite.typingInfoJson(f)
-    assert(json.contains("\"schema_version\": \"12.0.0\""))
-    assert(json.contains("\"index\": \"id\""))
+    val doc = org.json4s.jackson.JsonMethods.parse(json)
+    assert(doc \ "schema_version" == org.json4s.JString("12.0.0"))
+    assert(doc \ "index" == org.json4s.JString("id"))
     val schema = ReadWrite.typingInfoFromJson(json)
     assert(schema("cat").logicalType == LT.Ordinal(Seq("x", "y")))
     assert(schema.index.contains("id"))

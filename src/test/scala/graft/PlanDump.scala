@@ -133,9 +133,8 @@ re-spend a round on them. Full numbers in BENCH_SF1.md §"Round-9 probes".
    the approx knob is the SLOW plan at every measured scale — 47.3 s vs
    11.2 s exact at 150×/90M rows (BENCH_SF1 §r11): ApproximatePercentile
    is an ObjectHashAggregate outside whole-stage codegen and its
-   per-column final sketch merge is single-threaded. Do not flip
-   describe back to `approx = true` for scale; the knob remains only
-   for `percentile_approx` semantic parity.
+   per-column final sketch merge is single-threaded. The approx knob
+   is deleted; describe has only the exact path.
 
 5. **Fused (column, region, bucket) exact-quantile levels (r12).** Fusing
    the histogram walk's k concurrent per-column per-level aggs into ONE

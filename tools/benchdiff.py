@@ -45,8 +45,8 @@ def load_artifact(path):
         }
         qs = {}
         for name, rec in raw.items():
-            if name.startswith("__"):
-                continue
+            if name.startswith("__") or rec.get("failed"):
+                continue  # a failed query carries no timing
             short = name.split("_")[0]
             qs[short] = dict(rec)
             qs[short].setdefault("value_norm", rec["value"] / meta["factor"])
