@@ -5,19 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.WwConfig
+import graft.stats.Describe
 import graft.types.{ColStats, LogicalType, TypeSystem}
-import graft.util.Concurrency.runConcurrently
+import graft.util.Concurrency.both
 import graft.util.WorkingSet
 
 /** Distributed logical-type inference.
   *
   * The reference evaluates per-type python predicates over a ≤100k-row sample
   * series-by-series (reference: woodwork/type_sys/type_system.py:336-437).
-  * Spark-first re-expression: ONE `agg` job computes every statistic each
-  * predicate needs, for every candidate column at once; the DAG walk then runs
-  * driver-side on the collected numbers. Cost is a single sample scan
-  * regardless of table width or height, and the plan is fully
-  * codegen/vectorized (no UDFs).
+  * Spark-first re-expression: batched `agg` jobs over the sample compute
+  * every statistic each predicate needs, for every candidate column at
+  * once, and one stacked aggregation the exact distinct counts; the DAG
+  * walk then runs driver-side on the collected numbers. The plan count
+  * grows with table width over the batch size, not with the column count,
+  * and the plans are fully codegen/vectorized (no UDFs).
   */
 object TypeInference {
 
@@ -62,7 +64,7 @@ object TypeInference {
         struct(
           count(lit(1)).as("total"),
           count(s).as("nonNull"),
-          count_distinct(s).as("distinct"),
+          lit(0L).as("distinct"), // from the stacked distinct aggregation
           cnt(s.isNotNull && !s.rlike(intRegex)).as("intFail"),
           cnt(s.isNotNull && dbl.isNull).as("dblFail"),
           cnt(dbl.isNotNull && dbl % 1 =!= 0).as("dblNonIntegral"),
@@ -122,7 +124,7 @@ object TypeInference {
         struct(
           count(lit(1)).as("total"),
           count(c).as("nonNull"),
-          count_distinct(c).as("distinct"),
+          lit(0L).as("distinct"), // from the stacked distinct aggregation
           lit(0L).as("intFail"), lit(0L).as("dblFail"),
           lit(0L).as("dblNonIntegral"),
           nonIntegral.as("numNonIntegral"),
@@ -148,8 +150,7 @@ object TypeInference {
     }
   }
 
-  private def rowToStats(r: Row, idx: Int, dt: DataType): ColStats = {
-    val s = r.getStruct(idx)
+  private def rowToStats(s: Row, dt: DataType): ColStats =
     ColStats(
       dataType = dt,
       totalCount = s.getLong(0),
@@ -174,6 +175,37 @@ object TypeInference {
       nlAvgCommonWords = if (s.isNullAt(15)) Double.NaN else s.getDouble(15),
       dateShapeCount = s.getLong(16)
     )
+
+  /** Exact distinct counts of the string and numeric `fields` over `df` in
+    * ONE stacked aggregation: every row explodes into one
+    * `(cid, l: long, d: double, s: string)` row per column, with integral
+    * values in `l`, float/double values in `d` (grouping normalizes NaN
+    * and -0.0 as `count_distinct` does) and strings — after null-sentinel
+    * replacement — or decimals in `s`. Grouped per `(cid, value)`, then
+    * counted per `cid`: two shuffles for any width, where a
+    * `count_distinct` per column plans an Expand and three stages each.
+    * Returns column → (cid, distinct count); a column without a non-null
+    * value is absent.
+    */
+  private def distinctCounts(df: DataFrame, fields: Seq[StructField])
+      : Map[String, Row] = {
+    if (fields.isEmpty) return Map.empty
+    val slots = Seq(LongType, DoubleType, StringType)
+    val stacked = df.select(explode(array(fields.zipWithIndex.map { case (f, i) =>
+      val slot = f.dataType match {
+        case StringType => StringType
+        case _: DecimalType => StringType
+        case t if LogicalType.isFractionalType(t) => DoubleType
+        case _ => LongType
+      }
+      val v = LogicalType.replaceNans(col(f.name), f.dataType).cast(slot)
+      struct(lit(i).as("cid") +: slots.zip(Seq("l", "d", "s")).map {
+        case (t, nm) => (if (t == slot) v else lit(null).cast(t)).as(nm)
+      }: _*)
+    }: _*)).as("e")).select("e.cid", "e.l", "e.d", "e.s")
+      .where(col("l").isNotNull || col("d").isNotNull || col("s").isNotNull)
+    stacked.distinct().groupBy("cid").count()
+      .collect().map(r => fields(r.getInt(0)).name -> r).toMap
   }
 
   /** Compute [[ColStats]] for the given columns over the inference sample.
@@ -186,8 +218,10 @@ object TypeInference {
 
   /** Returns the stats and the sample frame, cached in `ws`, for follow-up
     * jobs (the NL and learned-datetime passes reuse it). Without sampling
-    * the sample is `df` itself, so a caller's cache on `df` is reused and
-    * left in place.
+    * the sample is `df` itself, uncached, so a caller's cache on `df` is
+    * reused and left in place. Beyond the row count that sizes the sample,
+    * the stats take ⌈columns / StatBatchSize⌉ batched aggs plus one stacked
+    * distinct aggregation, concurrently — not one agg per column.
     */
   private def collectStatsWithSample(
       ws: WorkingSet, df: DataFrame,
@@ -199,22 +233,30 @@ object TypeInference {
     // exact 100k sample; an exact-size sample would need a limit() that
     // collapses the stats agg to one partition. Tables at or below the bound
     // are used whole (exact reproducibility at test scale).
-    val base =
+    // A drawn sample is cached: the first job to read one of its
+    // partitions caches it, and the concurrent jobs below wait for that
+    // block instead of drawing it again. A table within the bound is read
+    // as it is: its few re-reads cost less than a cache build's own job.
+    val sampled =
       if (total > sampleSize)
-        df.sample(withReplacement = false, sampleSize.toDouble / total, 42)
+        ws.cache(df.sample(withReplacement = false, sampleSize.toDouble / total, 42))
       else df
-    val sampled = ws.cache(base)
-    sampled.count() // ONE full-table scan materializes the bounded sample
-    val fields = df.schema.fields.filter(f => cols.contains(f.name))
-    // One SMALL agg per column, run concurrently over the cached sample:
-    // a single wide agg across every column is one giant whole-stage-codegen
-    // function whose Janino compile costs more than the sample scan itself;
-    // per-column plans compile in parallel on the job-submitter threads and
-    // each re-scan hits the in-memory bounded sample.
-    val rows = runConcurrently(fields.toSeq)(f =>
-      sampled.agg(statExprs(f.name, f.dataType)).head())
-    (fields.zip(rows).map { case (f, r) =>
-      f.name -> rowToStats(r, 0, f.dataType)
+    val fields = df.schema.fields.toSeq.filter(f => cols.contains(f.name))
+    // Batched stat aggs over the sample, string columns first so a
+    // batch holds one physical kind (the heavy string predicates or the
+    // cheap numeric counts) but at most one mixed batch, each batch
+    // capped at Describe.StatBatchSize columns so every generated method
+    // stays inside Janino's and the JIT's limits; exact distinct counts
+    // come from ONE stacked aggregation, run concurrently with them.
+    val (strs, rest) = fields.partition(_.dataType == StringType)
+    val (statOf, distinctOf) = both(
+      Describe.batchedStructAgg(sampled,
+        (strs ++ rest).map(f => f.name -> statExprs(f.name, f.dataType))),
+      distinctCounts(sampled, fields.filter(f =>
+        f.dataType == StringType || f.dataType.isInstanceOf[NumericType])))
+    (fields.map { f =>
+      f.name -> rowToStats(statOf(f.name), f.dataType)
+        .copy(distinctCount = distinctOf.get(f.name).fold(0L)(_.getLong(1)))
     }.toMap, sampled)
   }
 

@@ -9,6 +9,8 @@ import graft.frame.WoodworkFrame
 import graft.util.Concurrency.runConcurrently
 import graft.util.{Ranks, WorkingSet}
 
+import scala.jdk.CollectionConverters._
+
 /** Pairwise column dependence: Pearson, Spearman, adjusted mutual information,
   * and their signed max (reference: `df.ww.dependence`,
   * woodwork/table_accessor.py:881-1433; engine
@@ -22,10 +24,12 @@ import graft.util.{Ranks, WorkingSet}
   *   - Spearman uses global average-ranks (one window per column) when a
   *     pair is null-free; only null-bearing pairs fall back to per-pair
   *     rank jobs.
-  *   - MI bins numeric columns by exact quantiles (pd.qcut equivalent),
-  *     then per-pair contingency tables (bounded by the reference's
-  *     800/6000-nunique drop rule) come back to the driver where the
-  *     sklearn-parity AMI correction runs on k×k counts.
+  *   - MI bins numeric columns by exact quantiles (pd.qcut equivalent,
+  *     one multi-column walk seeded by the pass-1 count/min/max), then
+  *     every pair's contingency table (bounded by the reference's
+  *     800/6000-nunique drop rule) comes back to the driver from ONE
+  *     stacked groupBy, and the sklearn-parity AMI correction runs on the
+  *     k×k counts.
   * Every score is scaled by shared/union rows
   * (reference: _calculate_dependence_measure.py:85).
   */
@@ -241,8 +245,13 @@ object Dependence {
       val needNunique: String => Boolean = n =>
         !numericSet(n) ||
           calcOrder.contains("spearman") || calcOrder.contains("mutual_info")
-      val colAggs: Seq[Column] = allCols.map(n =>
-        count(col(n)).as(s"cnt__$n"))
+      // numeric min/max ride the same agg: they seed MI's quantile walk,
+      // which then needs no stats job of its own
+      val colAggs: Seq[Column] = allCols.flatMap(n =>
+        count(col(n)).as(s"cnt__$n") +: (
+          if (calcOrder.contains("mutual_info") && numericSet(n))
+            Seq(min(col(n)).as(s"mn__$n"), max(col(n)).as(s"mx__$n"))
+          else Nil))
       val nunAggs: Seq[Column] = allCols.filter(needNunique).map { n =>
         val dc =
           if (numericSet(n)) approx_count_distinct(col(n))
@@ -321,8 +330,9 @@ object Dependence {
         results.size.toLong * calcOrder.size)
       if (calcOrder.contains("pearson")) caller.update(results.size.toLong)
 
-      // ---- spearman
-      if (calcOrder.contains("spearman")) {
+      // ---- spearman and mutual info read only pass-1 results and fill
+      // disjoint fields of each pair, so they run concurrently
+      val spearmanPart: () => Unit = () => if (calcOrder.contains("spearman")) {
         val spCols = allCols.filter(validFor("spearman")).filterNot(dropped)
         // distributed average-ranks (never a single-partition global sort),
         // joined back by value — valid for null-free pairs
@@ -385,7 +395,7 @@ object Dependence {
       }
 
       // ---- mutual info (AMI)
-      if (calcOrder.contains("mutual_info")) {
+      val mutualInfoPart: () => Unit = () => if (calcOrder.contains("mutual_info")) {
         val keep = allCols.filterNot(dropped)
         // quantile-bin numeric cols with >2 distinct values
         // (reference: _bin_numeric_cols_into_categories.py:4-27). Exact
@@ -398,8 +408,8 @@ object Dependence {
             val qs = (1 until numBins).map(_.toDouble / numBins)
             val binTargets = toBin.map(n =>
               n -> qs.map(p => p * (nonNull(n) - 1))).toMap
-            val quants = Describe.exactQuantiles(
-              prep.select(toBin.map(col): _*), binTargets)
+            val quants = Describe.exactQuantiles(prep, binTargets,
+              toBin.map(n => n -> ((nonNull(n), gd(s"mn__$n"), gd(s"mx__$n")))).toMap)
             toBin.map { n =>
               val bs = quants.get(n)
                 .map(_.filterNot(_.isNaN).distinct.sorted.toArray)
@@ -421,17 +431,27 @@ object Dependence {
         }
         val miPairs = results.filter(r => !dropped(r.col1) && !dropped(r.col2) &&
           r.sharedRows >= minShared)
-        runConcurrently(miPairs) { r =>
-          val ct = binned
-            .where(col(s"bin__${r.col1}").isNotNull && col(s"bin__${r.col2}").isNotNull)
-            .groupBy(s"bin__${r.col1}", s"bin__${r.col2}")
-            .agg(count(lit(1)).as("n"))
-            .collect()
-            .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
+        // every pair's contingency table from ONE groupBy(pair, binA, binB)
+        // over a stacked projection of the bin columns; cells are sorted so
+        // the AMI sums run in a fixed order
+        val cells = if (miPairs.isEmpty) Map.empty[Int, Array[Row]] else
+          binned.select(explode(array(miPairs.zipWithIndex.map { case (r, i) =>
+            struct(lit(i).as("p"), col(s"bin__${r.col1}").as("a"),
+              col(s"bin__${r.col2}").as("b"))
+          }: _*)).as("e")).select("e.p", "e.a", "e.b")
+            .where(col("a").isNotNull && col("b").isNotNull)
+            .groupBy("p", "a", "b").agg(count(lit(1)).as("n"))
+            .collect().groupBy(_.getInt(0))
+        miPairs.zipWithIndex.foreach { case (r, i) =>
+          val ct = cells.getOrElse(i, Array.empty[Row]).toSeq
+            .map(row => (row.getString(1), row.getString(2), row.getLong(3)))
+            .sortBy(c => (c._1, c._2))
           r.mutualInfo = Ami.adjustedMutualInfo(ct) * r.sharedRows / r.unionRows
           caller.update(1)
         }
       }
+
+      runConcurrently(Seq(spearmanPart, mutualInfoPart))(_())
 
       // ---- max (reference: _calculate_max_dependence_for_pair.py:5-50)
       if (calcMax) results.foreach { r =>
@@ -471,8 +491,8 @@ object Dependence {
           if (v.isNaN) null else v
         })
       }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), StructType(fields))
+      // a local relation: reading the result back runs no Spark job
+      spark.createDataFrame(rows.asJava, StructType(fields))
     }
   }
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.types._
 
 import graft.frame.WoodworkFrame
 import graft.types.LogicalType
-import graft.util.Concurrency.runConcurrently
+import graft.util.Concurrency.{both, runConcurrently}
+
+import scala.jdk.CollectionConverters._
 
 /** Distributed column profiling (reference: `df.ww.describe`,
   * woodwork/table_accessor.py:1454-1567; engine
@@ -19,9 +21,11 @@ import graft.util.Concurrency.runConcurrently
   * generated method and falls past Janino's 64KB whole-stage-codegen limit
   * (the same hazard dependence's pair batching guards). Parquet column
   * pruning makes the k batch scans read the same bytes as one full-width
-  * pass. mode/nunique/exact-quartiles run as one SMALL pruned-scan groupBy
-  * job per column, concurrently. Nothing is collected but the final
-  * per-column stat rows (bounded by table width, not height).
+  * pass. mode/nunique come from ONE stacked `(cid, value)` aggregation over
+  * every column, and the exact quartiles from ONE multi-column histogram
+  * walk, so a call runs a fixed handful of plans whatever the table's
+  * width. Nothing is collected but the final per-column stat rows (bounded
+  * by table width, not height).
   */
 object Describe {
 
@@ -51,7 +55,7 @@ object Describe {
     * struct. Parquet pruning means each batch job scans only its own
     * columns, so total IO matches a single full-width agg.
     */
-  private def batchedStructAgg(df: DataFrame,
+  private[graft] def batchedStructAgg(df: DataFrame,
                                items: Seq[(String, Column)]): Map[String, Row] = {
     runConcurrently(items.grouped(StatBatchSize).toSeq) { batch =>
       val exprs = batch.map(_._2)
@@ -100,19 +104,24 @@ object Describe {
     }
 
     val numCols = cols.collect { case (n, cs) if cs.isNumeric => n }
-    // exact nunique + mode come out of the single melt job below (one
+    // exact nunique + mode come out of the single melt job (one
     // (column,value) shuffle instead of a count_distinct Expand); exact
-    // quartiles ride the same per-column task via the sort-free histogram
-    // walk — never a percentile ObjectHashAggregate (whose final merge
-    // holds every distinct value in one process — a non-starter at 100 TB)
-    // and never a Sort node.
-    val statOf = batchedStructAgg(df, aggExprs)
-    val quartileTargets: Map[String, Seq[Double]] =
-      numCols.map(n => n -> statOf(n).getLong(1)).filter(_._2 > 0).map {
-        case (n, nonNull) => n -> Seq(0.25, 0.5, 0.75).map(p => p * (nonNull - 1))
+    // quartiles come from the sort-free histogram walk seeded by the stat
+    // aggs' count/min/max — never a percentile ObjectHashAggregate (whose
+    // final merge holds every distinct value in one process — a
+    // non-starter at 100 TB) and never a Sort node. The two chains read
+    // the frame independently, so they run side by side.
+    val ((statOf, quartiles), (modes, nuniques, _)) = both({
+      val statOf = batchedStructAgg(df, aggExprs)
+      val stats = numCols.map(n => n -> statOf(n)).collect {
+        case (n, s) if s.getLong(1) > 0 =>
+          n -> ((s.getLong(1), s.getDouble(4), s.getDouble(5)))
       }.toMap
-    val (modes, nuniques, quartiles) = meltStatsFull(df, cols.map(_._1),
-      quartileTargets, numCols.toSet)
+      val targets = stats.map { case (n, (nonNull, _, _)) =>
+        n -> Seq(0.25, 0.5, 0.75).map(p => p * (nonNull - 1))
+      }
+      (statOf, exactQuantiles(df, targets, stats))
+    }, meltStatsFull(df, cols.map(_._1), Map.empty, numCols.toSet))
     val spark = df.sparkSession
     // per-column progress callbacks (reference: _get_describe_dict.py:226-230)
     val caller = new graft.config.CallbackCaller(callback, "column", cols.size.toLong)
@@ -162,8 +171,8 @@ object Describe {
       StructField("min_datetime", TimestampType),
       StructField("max_datetime", TimestampType),
       StructField("mean_datetime", TimestampType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1), outSchema)
+    // a local relation: reading the result back runs no Spark job
+    spark.createDataFrame(out.asJava, outSchema)
   }
 
   /** First mode per column — ties break to the smallest value, matching
@@ -187,31 +196,33 @@ object Describe {
   private[graft] val QuantileBuckets = 4096
 
   /** Exact interpolated order statistics with NO Sort node anywhere:
-    * iterative histogram narrowing. Each level partitions every unresolved
-    * value region into [[QuantileBuckets]] equal-width buckets with ONE
-    * narrow agg over the raw column (count/min/max per bucket — map-side
+    * iterative histogram narrowing, every target column in ONE walk. The
+    * columns are stacked once as `(cid, v: double)` rows; each level
+    * partitions every unresolved value region of every column into
+    * [[QuantileBuckets]] equal-width buckets with ONE narrow agg over the
+    * stacked rows (count/min/max per (region, bucket) — map-side
     * combined, so the shuffle carries ≤ regions·buckets rows regardless of
-    * data size). A bucket whose observed min == max is a single distinct
-    * value and resolves every rank that falls inside it; any other bucket
-    * holding a wanted rank recurses with its OBSERVED [min,max] as the next
-    * region bounds. Both region endpoints always land in different buckets
-    * (v=lo → bucket 0, v=hi → clamp(⌊B⌋) = B−1), so width shrinks ~B× per
-    * level and an adjacent-double region splits into two single-valued
-    * buckets — ≤ log_B(width/ulp) levels for any double column (≈6 worst
-    * case, 2–3 in practice). This replaces the former range-partitioned
-    * prefix-sum walk over the distinct-value table, whose per-partition
-    * Sort made exact describe the suite's worst scale ratio (8.8× at 30×,
-    * BENCH_SF1 §r10.3): at 100 TB the levels are narrow column scans with
+    * data size or column count). A bucket whose observed min == max is a
+    * single distinct value and resolves every rank that falls inside it;
+    * any other bucket holding a wanted rank recurses with its OBSERVED
+    * [min,max] as the next region bounds. Both region endpoints always
+    * land in different buckets (v=lo → bucket 0, v=hi → clamp(⌊B⌋) = B−1),
+    * so width shrinks ~B× per level and an adjacent-double region splits
+    * into two single-valued buckets — ≤ log_B(width/ulp) levels for any
+    * double column (≈6 worst case, 2–3 in practice). A column's regions
+    * never depend on another column's, so each column resolves exactly as
+    * a walk of its own would, while a k-column call runs one job chain per
+    * level instead of k. At 100 TB the levels are narrow column scans with
     * bounded shuffles, and nothing ever sorts.
     *
     * `targets` maps column → fractional order-statistic positions p·(n−1);
     * interpolation matches SQL `percentile`:
     * v_lo·(⌈pos⌉−pos) + v_hi·(pos−⌊pos⌋). `stats` optionally supplies
     * per-column (nonNullCount, min, max) a caller already aggregated (the
-    * describe/boxplot paths have them); missing entries are computed in one
-    * batched agg. Columns with zero non-null values are absent from the
-    * result. NaN values follow Spark's sort order (greater than any real);
-    * a rank that lands among NaNs resolves to NaN.
+    * describe/boxplot/dependence paths have them); missing entries are
+    * computed in one batched agg. Columns with zero non-null values are
+    * absent from the result. NaN values follow Spark's sort order (greater
+    * than any real); a rank that lands among NaNs resolves to NaN.
     */
   def exactQuantiles(df: DataFrame, targets: Map[String, Seq[Double]],
                      stats: Map[String, (Long, Double, Double)] = Map.empty)
@@ -232,14 +243,26 @@ object Describe {
         }
       }
     val all = stats ++ computed
-    runConcurrently(targets.toSeq) { case (n, ps) =>
-      val (cnt, mn, mx) = all(n)
-      Option.when(cnt > 0) {
-        val v = col(n).cast(DoubleType)
-        n -> bisectColumn(
-          df.select(v.as("v")).where(v.isNotNull), ps, cnt, mn, mx)
-      }
-    }.flatten.toMap
+    val names = targets.keys.toSeq.sorted.filter(n => all(n)._1 > 0)
+    if (names.isEmpty) return Map.empty
+    names.zip(bisect(stackDoubles(df, names),
+      names.map(n => (targets(n), all(n))))).toMap
+  }
+
+  /** The non-null values of `names` as `(cid, v: double)` rows, cid the
+    * column's position in `names`. One column is a plain projection; more
+    * are exploded from one struct array per input row, so every walk level
+    * reads the input once.
+    */
+  private def stackDoubles(df: DataFrame, names: Seq[String]): DataFrame = {
+    val stacked =
+      if (names.size == 1)
+        df.select(lit(0).as("cid"), col(names.head).cast(DoubleType).as("v"))
+      else
+        df.select(explode(array(names.zipWithIndex.map { case (n, i) =>
+          struct(lit(i).as("cid"), col(n).cast(DoubleType).as("v"))
+        }: _*)).as("e")).select("e.cid", "e.v")
+    stacked.where(col("v").isNotNull)
   }
 
   /** PER-GROUP exact quantiles — "median by category" at scale: for each
@@ -374,24 +397,29 @@ object Describe {
         }): _*)
   }
 
-  /** One unresolved value region of the histogram walk: the predicate chain
-    * that defines membership, its observed [lo,hi] bounds, the global rank
-    * of its first value (`offset`), and the wanted ranks inside it.
+  /** One unresolved value region of the histogram walk: the column it
+    * belongs to, the predicate that defines membership, its observed
+    * [lo,hi] bounds, the column-wide rank of its first value (`offset`),
+    * and the wanted ranks inside it.
     */
-  private final case class QRegion(filter: Column, lo: Double, hi: Double,
-                                   offset: Long, ranks: Seq[Long])
+  private final case class QRegion(cid: Int, filter: Column, lo: Double,
+                                   hi: Double, offset: Long, ranks: Seq[Long])
 
-  /** Core of [[exactQuantiles]] for one column. `base` is the single-column
-    * non-null projection named "v"; `cnt`/`mn`/`mx` its non-null count and
-    * bounds.
+  /** Core of [[exactQuantiles]]. `base` holds the stacked non-null
+    * `(cid, v)` rows; `cols(cid)` is that column's wanted positions and its
+    * (non-null count, min, max). Returns each column's values at its
+    * positions, in `cols` order.
     */
-  private def bisectColumn(base: DataFrame, positions: Seq[Double],
-                           cnt: Long, mn: Double, mx: Double): Seq[Double] = {
+  private def bisect(base: DataFrame,
+                     cols: Seq[(Seq[Double], (Long, Double, Double))])
+      : Seq[Seq[Double]] = {
     val B = QuantileBuckets
     val v = col("v")
-    // bucket assignment for a region [lo,hi]; membership of the NEXT level
-    // is defined by this same expression (`=== b`), so driver-side boundary
-    // arithmetic can never disagree with executor-side assignment
+    // bucket assignment for a region [lo,hi]. Every branch is monotone in
+    // Spark's value order (NaN last, -0.0 = 0.0), so a bucket's members are
+    // exactly the column's values between its OBSERVED min and max: the
+    // next level's membership is that closed range — one compare pair per
+    // region, not the chain of every enclosing region's bucket expression
     def mkBucket(lo: Double, hi: Double): Column = {
       val w = hi - lo
       if (java.lang.Double.isFinite(w) && w > 0)
@@ -421,15 +449,19 @@ object Describe {
         when(isnan(v), lit(1)).when(v < lit(mid), lit(0)).otherwise(lit(1))
       }
     }
-    val resolved = scala.collection.mutable.Map.empty[Long, Double]
-    val wanted = positions
-      .flatMap(p => Seq(math.floor(p).toLong, math.ceil(p).toLong))
-      .distinct.filter(r => r >= 0 && r < cnt)
-    var regions: List[QRegion] =
-      if (wanted.isEmpty) Nil
-      else if (mn == mx) { wanted.foreach(r => resolved(r) = mn); Nil }
-      else if (mn.isNaN && mx.isNaN) { wanted.foreach(r => resolved(r) = mn); Nil }
-      else List(QRegion(lit(true), mn, mx, 0L, wanted))
+    // (cid, rank) → value
+    val resolved = scala.collection.mutable.Map.empty[(Int, Long), Double]
+    var regions: List[QRegion] = cols.zipWithIndex.toList.flatMap {
+      case ((positions, (cnt, mn, mx)), cid) =>
+        val wanted = positions
+          .flatMap(p => Seq(math.floor(p).toLong, math.ceil(p).toLong))
+          .distinct.filter(r => r >= 0 && r < cnt)
+        if (wanted.isEmpty) Nil
+        else if (mn == mx || (mn.isNaN && mx.isNaN)) {
+          wanted.foreach(r => resolved((cid, r)) = mn); Nil
+        }
+        else List(QRegion(cid, col("cid") === cid, mn, mx, 0L, wanted))
+    }
     var level = 0
     while (regions.nonEmpty && level < 64) {
       level += 1
@@ -455,8 +487,9 @@ object Describe {
           val inside = reg.ranks.filter(rk => rk >= cum && rk < cum + c)
           if (inside.nonEmpty) {
             if (bmn == bmx || (bmn.isNaN && bmx.isNaN))
-              inside.foreach(rk => resolved(rk) = bmn)
-            else next += QRegion(reg.filter && (buckets(i) === b),
+              inside.foreach(rk => resolved((reg.cid, rk)) = bmn)
+            else next += QRegion(reg.cid,
+              col("cid") === reg.cid && v >= lit(bmn) && v <= lit(bmx),
               bmn, bmx, cum, inside)
           }
           cum += c
@@ -464,12 +497,14 @@ object Describe {
       }
       regions = next.result()
     }
-    positions.map { pos =>
-      val lo = math.floor(pos).toLong
-      val hi = math.ceil(pos).toLong
-      def at(ix: Long): Double = resolved.getOrElse(ix, Double.NaN)
-      if (lo == hi) at(lo)
-      else at(lo) * (hi - pos) + at(hi) * (pos - lo)
+    cols.zipWithIndex.map { case ((positions, _), cid) =>
+      positions.map { pos =>
+        val lo = math.floor(pos).toLong
+        val hi = math.ceil(pos).toLong
+        def at(ix: Long): Double = resolved.getOrElse((cid, ix), Double.NaN)
+        if (lo == hi) at(lo)
+        else at(lo) * (hi - pos) + at(hi) * (pos - lo)
+      }
     }
   }
 
@@ -480,13 +515,14 @@ object Describe {
     *     columns tie-break on the numeric value, strings lexicographically);
     *   - exact nunique: the group count;
     *   - exact quartiles: delegated to the sort-free histogram walk
-    *     ([[exactQuantiles]]/bisectColumn), seeded with the count/min/max
-    *     this job's own agg already produced — zero extra stat scans.
+    *     ([[exactQuantiles]]), seeded with the count/min/max this job's own
+    *     agg already produced — zero extra stat scans.
     *
-    * One small groupBy job per column, run CONCURRENTLY: parquet column
-    * pruning means k single-column scans read the same bytes as one k-column
-    * melt, with an 8-byte shuffle key, far smaller plans, and no cross-column
-    * shuffle mixing (measured 3× faster than the exploded melt at sf0.1).
+    * ONE stacked aggregation for every column: each input row explodes into
+    * one `(cid, d: double, s: string)` row per column — `d` set for numeric
+    * columns, which never pass through a string cast, `s` for the rest —
+    * grouped per `(cid, value)` and then reduced per `cid`. Every column's
+    * statistics come from one job chain, whatever the table's width.
     *
     * `targets` maps numeric columns to fractional order-statistic positions
     * (p·(n−1)); interpolation matches SQL `percentile`:
@@ -505,35 +541,35 @@ object Describe {
     if (cols.isEmpty) return (Map.empty, Map.empty, Map.empty)
     val numish = cols.filter(n => targets.contains(n) || numericCols.contains(n)).toSet
     val integral = numish.filter(n => LogicalType.isIntegralType(df.schema(n).dataType))
-    // per column: (nunique, mode, quartiles) — absent for an all-null
-    // column, and a null mode or quartile stays out of its map
-    val perCol = runConcurrently(cols) { n =>
+    val nullD = lit(null).cast(DoubleType)
+    val nullS = lit(null).cast(StringType)
+    val stacked = df.select(explode(array(cols.zipWithIndex.map { case (n, i) =>
       val isNum = numish(n)
-      val v = if (isNum) col(n).cast(DoubleType) else col(n).cast(StringType)
-      val base = df.select(v.as("v")).where(col("v").isNotNull)
-      val g = base.groupBy("v").agg(count(lit(1)).as("cnt"))
-      val top = g
-        .agg(min(struct((-col("cnt")).as("negCnt"), col("v"))).as("top"),
-          count(lit(1)).as("nu"), sum(col("cnt")).as("nn"),
-          min(col("v")).as("mn"), max(col("v")).as("mx"))
-        .head()
-      val nu = top.getLong(1)
-      Option.when(nu > 0) {
-        val t = top.getStruct(0)
-        val modeStr =
-          if (!isNum) t.getString(1)
-          else {
-            val d = t.getDouble(1)
-            if (integral(n)) d.toLong.toString else d.toString
-          }
-        (nu, Option(modeStr), targets.get(n).map(ps => bisectColumn(base, ps,
-          top.getLong(2), top.getDouble(3), top.getDouble(4))))
-      }
+      struct(lit(i).as("cid"),
+        (if (isNum) col(n).cast(DoubleType) else nullD).as("d"),
+        (if (isNum) nullS else col(n).cast(StringType)).as("s"))
+    }: _*)).as("e")).select("e.cid", "e.d", "e.s")
+      .where(col("d").isNotNull || col("s").isNotNull)
+    // one row per column holding a non-null value: (cid, top, nunique,
+    // non-null count, numeric min, numeric max)
+    val found = stacked.groupBy("cid", "d", "s").agg(count(lit(1)).as("cnt"))
+      .groupBy("cid")
+      .agg(min(struct((-col("cnt")).as("negCnt"), col("d"), col("s"))).as("top"),
+        count(lit(1)).as("nu"), sum(col("cnt")).as("nn"),
+        min(col("d")).as("mn"), max(col("d")).as("mx"))
+      .collect().map(r => cols(r.getInt(0)) -> r).toMap
+    val modes = found.map { case (n, r) =>
+      val t = r.getStruct(1)
+      n -> (if (!numish(n)) t.getString(2)
+        else if (integral(n)) t.getDouble(1).toLong.toString
+        else t.getDouble(1).toString)
     }
-    val found = cols.zip(perCol).collect { case (n, Some(r)) => n -> r }
-    (found.flatMap { case (n, r) => r._2.map(n -> _) }.toMap,
-      found.map { case (n, r) => n -> r._1 }.toMap,
-      found.flatMap { case (n, r) => r._3.map(n -> _) }.toMap)
+    val quartiles = exactQuantiles(df,
+      targets.filter { case (n, _) => found.contains(n) },
+      found.collect { case (n, r) if targets.contains(n) =>
+        n -> ((r.getLong(3), r.getDouble(4), r.getDouble(5)))
+      })
+    (modes, found.map { case (n, r) => n -> r.getLong(2) }, quartiles)
   }
 
   /** Equal-width histogram of a numeric column in `bins` buckets
@@ -649,9 +685,7 @@ object Describe {
       StructField("histogram", HistEntry),
       StructField("top_values", CountEntry),
       StructField("recent_values", CountEntry)))
-    val extras = spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(extraRows).asJava), extraSchema)
+    val extras = spark.createDataFrame(extraRows.asJava, extraSchema)
     base.join(extras, Seq("column_name"), "left")
   }
 }

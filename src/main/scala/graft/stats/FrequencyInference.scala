@@ -78,7 +78,7 @@ object FrequencyInference {
     // sorted-series diffs, independent of partition count.
     val spark = df.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism, 4)
-    val (counts, observed) = WorkingSet.scoped { ws =>
+    val (top, observed) = WorkingSet.scoped { ws =>
       val withPid = ws.cache(df.where(c.isNotNull)
         .select(unix_micros(c.cast("timestamp")).as("us"))
         .repartitionByRange(parts, col("us"))
@@ -98,18 +98,18 @@ object FrequencyInference {
       val all =
         if (boundary.isEmpty) inner
         else inner.unionAll(boundary.toDF("diff"))
-      // one scan: group the deltas, then both the top delta and the total
-      // observed count come from the (tiny) grouped result
-      val grouped = ws.cache(all.groupBy("diff").agg(count(lit(1)).as("cnt")))
-      // deterministic winner: highest count, then SMALLEST delta
-      val top = grouped.orderBy(col("cnt").desc, col("diff").asc)
-        .limit(5).collect()
-      val obs = grouped.agg(coalesce(sum("cnt"), lit(0L))).head().getLong(0)
-      (top, obs)
+      // one aggregate over the grouped deltas yields both the winner —
+      // highest count, then SMALLEST delta, deterministically — and the
+      // total observed count
+      val r = all.groupBy("diff").agg(count(lit(1)).as("cnt"))
+        .agg(min(struct((-col("cnt")).as("negCnt"), col("diff"))),
+          coalesce(sum("cnt"), lit(0L)))
+        .head()
+      (Option(r.getStruct(0)), r.getLong(1))
     }
-    if (counts.isEmpty || observed == 0)
+    if (top.isEmpty || observed == 0)
       return FreqResult(colName, None, 0.0, observed)
-    val (bestDelta, bestCnt) = (counts.head.getLong(0), counts.head.getLong(1))
+    val (bestDelta, bestCnt) = (top.get.getLong(1), -top.get.getLong(0))
     val share = bestCnt.toDouble / observed
     if (share >= threshold) {
       // weekly deltas anchor on the dominant weekday like pandas ("W-SUN"),

@@ -1,8 +1,10 @@
 package graft.stats
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+
+import graft.util.Concurrency.both
 
 /** Outlier detection: IQR box plot and medcouple-adjusted (skewed) box plot
   * (reference: woodwork/column_accessor.py:389-546; engine
@@ -29,14 +31,15 @@ object Outliers {
     * sort-free histogram walk ([[graft.stats.Describe.exactQuantiles]]),
     * seeded with this agg's count/min/max so no stat scan repeats.
     * Interpolation is identical to SQL percentile, so oracle parity carries
-    * over.
+    * over. `extra` aggregates ride the same agg; the second result holds
+    * their values, in order.
     */
-  private def quantilesFor(df: DataFrame, cols: Seq[String])
-      : Map[String, (Double, Double, Double, Double, Double)] = {
+  private def quantilesFor(df: DataFrame, cols: Seq[String], extra: Seq[Column] = Nil)
+      : (Map[String, (Double, Double, Double, Double, Double)], Row) = {
     val aggExprs = cols.flatMap { n =>
       val c = col(n).cast(DoubleType)
       Seq(count(c).as(s"cnt__$n"), min(c).as(s"mn__$n"), max(c).as(s"mx__$n"))
-    }
+    } ++ extra
     val r = df.agg(aggExprs.head, aggExprs.tail: _*).head()
     def cnt(n: String): Long = r.getLong(r.fieldIndex(s"cnt__$n"))
     // all-null / empty columns: min and max aggregate to NULL, and
@@ -48,18 +51,14 @@ object Outliers {
     val targets = cols.filter(cnt(_) > 0).map { n =>
       n -> Seq(0.25, 0.5, 0.75).map(p => p * (cnt(n) - 1))
     }.toMap
-    val casted = df.select(cols.map(n => col(n).cast(DoubleType).as(n)): _*)
     val stats = targets.keys.map(n =>
       n -> ((cnt(n), d(s"mn__$n"), d(s"mx__$n")))).toMap
-    val quarts = Describe.exactQuantiles(casted, targets, stats)
-    cols.map { n =>
+    val quarts = Describe.exactQuantiles(df, targets, stats)
+    (cols.map { n =>
       val q = quarts.getOrElse(n, Seq(Double.NaN, Double.NaN, Double.NaN))
       n -> (d(s"mn__$n"), q(0), q(1), q(2), d(s"mx__$n"))
-    }.toMap
+    }.toMap, Row.fromSeq(r.toSeq.drop(3 * cols.size)))
   }
-
-  private def quantiles(df: DataFrame, colName: String): (Double, Double, Double, Double, Double) =
-    quantilesFor(df, Seq(colName))(colName)
 
   private def outlierCounts(df: DataFrame, colName: String,
                             low: Double, high: Double): (Long, Long) = {
@@ -76,11 +75,12 @@ object Outliers {
   def boxPlot(df: DataFrame, colName: String): BoxPlotInfo =
     boxPlots(df, Seq(colName))(colName)
 
-  /** Multi-column box plots in THREE distributed jobs total (count/min/max
-    * agg + one melt + one outlier-count agg), instead of per-column loops.
+  /** Multi-column box plots from three plans whatever the column count:
+    * one count/min/max agg, one multi-column quartile walk (one job chain
+    * per narrowing level) and one outlier-count agg.
     */
   def boxPlots(df: DataFrame, cols: Seq[String]): Map[String, BoxPlotInfo] = {
-    val qs = quantilesFor(df, cols)
+    val (qs, _) = quantilesFor(df, cols)
     val bounds = cols.map { n =>
       val (mn, q1, _, q3, mx) = qs(n)
       val iqr = q3 - q1
@@ -207,11 +207,14 @@ object Outliers {
     */
   def medcoupleBoxPlot(df: DataFrame, colName: String,
                        knownMc: Option[Double] = None): BoxPlotInfo = {
-    val (mn, q1, med, q3, mx) = quantiles(df, colName)
-    val mc = knownMc.getOrElse(medcouple(df, colName))
+    // the sample skewness rides the quartiles' count/min/max agg; the
+    // medcouple sample needs neither, so it is drawn alongside
+    val ((qs, extra), mc) = both(
+      quantilesFor(df, Seq(colName), Seq(skewness(col(colName).cast(DoubleType)))),
+      knownMc.getOrElse(medcouple(df, colName)))
+    val (mn, q1, med, q3, mx) = qs(colName)
     val iqr = q3 - q1
-    val skewRow = df.agg(skewness(col(colName).cast(DoubleType))).head()
-    val skew = if (skewRow.isNullAt(0)) Double.NaN else skewRow.getDouble(0)
+    val skew = if (extra.isNullAt(0)) Double.NaN else extra.getDouble(0)
     val cap = 3.5
     val a = math.min(math.abs(skew), cap)
     val (c1, c2) = if (mc >= 0) (-a, a) else (a, -a)

@@ -1,5 +1,7 @@
 package graft.util
 
+import org.apache.spark.{SparkContext, SparkEnv}
+
 /** The one driver-side fan-out: run independent units (each typically
   * one or more eager Spark jobs) concurrently and return their results
   * in input order. Spark schedules concurrent jobs fine, so the latency
@@ -20,8 +22,18 @@ package graft.util
   *
   * Job tags are thread-local, so tagging happens inside each unit;
   * because pool threads are fresh per call, no tag leaks across calls.
+  * The context is looked up inside each unit and again at cancel time,
+  * not once per call, so units still carry the tag when no session
+  * existed yet at the call (a unit may create it).
   */
 object Concurrency {
+  /** The running SparkContext, if any. Sessions may be cleared while the
+    * context runs on, so a live `SparkEnv` is the test; `getOrCreate`
+    * then returns the running context instead of creating one.
+    */
+  private def context: Option[SparkContext] =
+    Option(SparkEnv.get).map(_ => SparkContext.getOrCreate())
+
   def runConcurrently[A, B](items: Seq[A])(work: A => B): Seq[B] = {
     if (items.isEmpty) return Nil
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -29,19 +41,24 @@ object Concurrency {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(items.size, 8))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext)
     val tag = "graft-conc-" + java.lang.Long.toHexString(System.nanoTime())
     try Await.result(Future.sequence(items.map(i => Future {
-      sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+      context.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
       work(i)
     })), Duration.Inf)
     catch { case e: Throwable =>
-      sc.foreach(_.cancelJobsWithTag(tag))
+      context.foreach(_.cancelJobsWithTag(tag))
       pool.shutdownNow()
       throw e
     }
     finally pool.shutdown()
+  }
+
+  /** Two units whose results differ in type, as one [[runConcurrently]]
+    * call.
+    */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = runConcurrently(Seq[() => Any](() => a, () => b))(_())
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 }

@@ -91,6 +91,46 @@ class ConcurrencySpec extends SparkSpec {
     assert(sc.statusTracker.getActiveJobIds.isEmpty)
   }
 
+  test("units that create the session themselves are still cancelled") {
+    import org.apache.spark.sql.SparkSession
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+      val e = intercept[IllegalStateException] {
+        runConcurrently(Seq(0, 1)) { i =>
+          val s = SparkSession.builder().getOrCreate()
+          if (i == 0) {
+            val deadline = System.nanoTime() + 20000000000L
+            while (s.sparkContext.statusTracker.getActiveJobIds.isEmpty &&
+                System.nanoTime() < deadline) Thread.sleep(20)
+            throw new IllegalStateException("unit 0 failed")
+          }
+          // the interrupt alone does not stop a running job; the cancel
+          // by tag does, which needs the tag on this unit's job
+          val t = new Thread(() =>
+            try s.sparkContext.parallelize(1 to 4, 4)
+              .map { x => Thread.sleep(60000); x }.count()
+            catch { case _: Exception => () })
+          t.start()
+          t.join()
+        }
+      }
+      assert(e.getMessage == "unit 0 failed")
+      val deadline = System.nanoTime() + 5000000000L
+      while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   test("a local property set on the caller thread is visible inside units") {
     val key = "graft.spec.layer"
     sc.setLocalProperty(key, "caller")
