@@ -49,7 +49,8 @@ object TypeInference {
     coalesce(sum(when(cond, 1L)), lit(0L))
 
   /** Aggregate expressions producing one struct per column; collected into
-    * [[ColStats]] driver-side.
+    * [[ColStats]] driver-side with the distinct count from
+    * [[distinctCounts]].
     */
   private def statExprs(name: String, dt: DataType): Column = {
     val opts = WwConfig.options
@@ -64,7 +65,6 @@ object TypeInference {
         struct(
           count(lit(1)).as("total"),
           count(s).as("nonNull"),
-          lit(0L).as("distinct"), // from the stacked distinct aggregation
           cnt(s.isNotNull && !s.rlike(intRegex)).as("intFail"),
           cnt(s.isNotNull && dbl.isNull).as("dblFail"),
           cnt(dbl.isNotNull && dbl % 1 =!= 0).as("dblNonIntegral"),
@@ -124,7 +124,6 @@ object TypeInference {
         struct(
           count(lit(1)).as("total"),
           count(c).as("nonNull"),
-          lit(0L).as("distinct"), // from the stacked distinct aggregation
           lit(0L).as("intFail"), lit(0L).as("dblFail"),
           lit(0L).as("dblNonIntegral"),
           nonIntegral.as("numNonIntegral"),
@@ -138,7 +137,6 @@ object TypeInference {
         struct(
           count(lit(1)).as("total"),
           count(c).as("nonNull"),
-          lit(0L).as("distinct"),
           lit(0L).as("intFail"), lit(0L).as("dblFail"),
           lit(0L).as("dblNonIntegral"), lit(0L).as("numNonIntegral"),
           lit(0L).as("dtFail"), lit(0L).as("boolBad"),
@@ -150,30 +148,30 @@ object TypeInference {
     }
   }
 
-  private def rowToStats(s: Row, dt: DataType): ColStats =
+  private def rowToStats(s: Row, dt: DataType, distinct: Long): ColStats =
     ColStats(
       dataType = dt,
       totalCount = s.getLong(0),
       nonNullCount = s.getLong(1),
-      distinctCount = s.getLong(2),
-      intParseFail = s.getLong(3),
-      dblParseFail = s.getLong(4),
-      dblNonIntegral = s.getLong(5),
-      numNonIntegral = s.getLong(6),
-      dtParseFail = s.getLong(7),
-      boolBadToken = s.getLong(8),
+      distinctCount = distinct,
+      intParseFail = s.getLong(2),
+      dblParseFail = s.getLong(3),
+      dblNonIntegral = s.getLong(4),
+      numNonIntegral = s.getLong(5),
+      dtParseFail = s.getLong(6),
+      boolBadToken = s.getLong(7),
       boolTokens = {
-        val flags = Option(s.getSeq[Int](9)).getOrElse(Seq.empty)
+        val flags = Option(s.getSeq[Int](8)).getOrElse(Seq.empty)
         val tokens = WwConfig.options.booleanTransformMappings.keySet.toSeq.sorted
         tokens.zip(flags).collect { case (t, f) if f == 1 => t }.toSet
       },
-      emailFail = s.getLong(10),
-      phoneFail = s.getLong(11),
-      postalFail = s.getLong(12),
-      urlFail = s.getLong(13),
-      ipFail = s.getLong(14),
-      nlAvgCommonWords = if (s.isNullAt(15)) Double.NaN else s.getDouble(15),
-      dateShapeCount = s.getLong(16)
+      emailFail = s.getLong(9),
+      phoneFail = s.getLong(10),
+      postalFail = s.getLong(11),
+      urlFail = s.getLong(12),
+      ipFail = s.getLong(13),
+      nlAvgCommonWords = if (s.isNullAt(14)) Double.NaN else s.getDouble(14),
+      dateShapeCount = s.getLong(15)
     )
 
   /** Exact distinct counts of the string and numeric `fields` over `df` in
@@ -184,11 +182,11 @@ object TypeInference {
     * replacement — or decimals in `s`. Grouped per `(cid, value)`, then
     * counted per `cid`: two shuffles for any width, where a
     * `count_distinct` per column plans an Expand and three stages each.
-    * Returns column → (cid, distinct count); a column without a non-null
-    * value is absent.
+    * Returns column → distinct count; a column without a non-null value is
+    * absent.
     */
   private def distinctCounts(df: DataFrame, fields: Seq[StructField])
-      : Map[String, Row] = {
+      : Map[String, Long] = {
     if (fields.isEmpty) return Map.empty
     val slots = Seq(LongType, DoubleType, StringType)
     val stacked = df.select(explode(array(fields.zipWithIndex.map { case (f, i) =>
@@ -205,7 +203,7 @@ object TypeInference {
     }: _*)).as("e")).select("e.cid", "e.l", "e.d", "e.s")
       .where(col("l").isNotNull || col("d").isNotNull || col("s").isNotNull)
     stacked.distinct().groupBy("cid").count()
-      .collect().map(r => fields(r.getInt(0)).name -> r).toMap
+      .collect().map(r => fields(r.getInt(0)).name -> r.getLong(1)).toMap
   }
 
   /** Compute [[ColStats]] for the given columns over the inference sample.
@@ -255,8 +253,8 @@ object TypeInference {
       distinctCounts(sampled, fields.filter(f =>
         f.dataType == StringType || f.dataType.isInstanceOf[NumericType])))
     (fields.map { f =>
-      f.name -> rowToStats(statOf(f.name), f.dataType)
-        .copy(distinctCount = distinctOf.get(f.name).fold(0L)(_.getLong(1)))
+      f.name -> rowToStats(statOf(f.name), f.dataType,
+        distinctOf.getOrElse(f.name, 0L))
     }.toMap, sampled)
   }
 

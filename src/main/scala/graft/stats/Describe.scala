@@ -111,7 +111,7 @@ object Describe {
     // final merge holds every distinct value in one process — a
     // non-starter at 100 TB) and never a Sort node. The two chains read
     // the frame independently, so they run side by side.
-    val ((statOf, quartiles), (modes, nuniques, _)) = both({
+    val ((statOf, quartiles), (modes, nuniques)) = both({
       val statOf = batchedStructAgg(df, aggExprs)
       val stats = numCols.map(n => n -> statOf(n)).collect {
         case (n, s) if s.getLong(1) > 0 =>
@@ -121,7 +121,7 @@ object Describe {
         n -> Seq(0.25, 0.5, 0.75).map(p => p * (nonNull - 1))
       }
       (statOf, exactQuantiles(df, targets, stats))
-    }, meltStatsFull(df, cols.map(_._1), Map.empty, numCols.toSet))
+    }, meltStats(df, cols.map(_._1), numCols.toSet))
     val spark = df.sparkSession
     // per-column progress callbacks (reference: _get_describe_dict.py:226-230)
     val caller = new graft.config.CallbackCaller(callback, "column", cols.size.toLong)
@@ -175,20 +175,6 @@ object Describe {
     spark.createDataFrame(out.asJava, outSchema)
   }
 
-  /** First mode per column — ties break to the smallest value, matching
-    * pandas' sorted `Series.mode()[0]` (reference:
-    * statistics_utils/_get_mode.py:1-6). All columns in one melt job: values
-    * are stacked as (column, value-as-string) pairs, counted, and ranked.
-    */
-  def modesFor(df: DataFrame, cols: Seq[String]): Map[String, String] =
-    meltStatsFull(df, cols, Map.empty)._1
-
-  def meltStats(df: DataFrame,
-                cols: Seq[String]): (Map[String, String], Map[String, Long]) = {
-    val r = meltStatsFull(df, cols, Map.empty)
-    (r._1, r._2)
-  }
-
   /** Buckets per region and level of the exact-quantile histogram walk:
     * regions·4096 groups per agg keeps the shuffle a few KB while shrinking
     * region width ~4096× per level.
@@ -211,9 +197,12 @@ object Describe {
     * into two single-valued buckets — ≤ log_B(width/ulp) levels for any
     * double column (≈6 worst case, 2–3 in practice). A column's regions
     * never depend on another column's, so each column resolves exactly as
-    * a walk of its own would, while a k-column call runs one job chain per
-    * level instead of k. At 100 TB the levels are narrow column scans with
-    * bounded shuffles, and nothing ever sorts.
+    * a walk of its own would, while a k-column call runs one job per level
+    * instead of k. Each level stacks only the columns that still have an
+    * open region, so a column that resolved early is not read again: the
+    * work is Σ levels·N over the columns, as with one walk per column. At
+    * 100 TB the levels are narrow column scans with bounded shuffles, and
+    * nothing ever sorts.
     *
     * `targets` maps column → fractional order-statistic positions p·(n−1);
     * interpolation matches SQL `percentile`:
@@ -245,23 +234,23 @@ object Describe {
     val all = stats ++ computed
     val names = targets.keys.toSeq.sorted.filter(n => all(n)._1 > 0)
     if (names.isEmpty) return Map.empty
-    names.zip(bisect(stackDoubles(df, names),
-      names.map(n => (targets(n), all(n))))).toMap
+    names.zip(bisect(df, names, names.map(n => (targets(n), all(n))))).toMap
   }
 
-  /** The non-null values of `names` as `(cid, v: double)` rows, cid the
-    * column's position in `names`. One column is a plain projection; more
-    * are exploded from one struct array per input row, so every walk level
-    * reads the input once.
+  /** The non-null values of the `(column, cid)` pairs in `cols` as
+    * `(cid, v: double)` rows. One column is a plain projection; more are
+    * exploded from one struct array per input row, so a walk level reads
+    * the input once.
     */
-  private def stackDoubles(df: DataFrame, names: Seq[String]): DataFrame = {
-    val stacked =
-      if (names.size == 1)
-        df.select(lit(0).as("cid"), col(names.head).cast(DoubleType).as("v"))
-      else
-        df.select(explode(array(names.zipWithIndex.map { case (n, i) =>
-          struct(lit(i).as("cid"), col(n).cast(DoubleType).as("v"))
+  private def stackDoubles(df: DataFrame, cols: Seq[(String, Int)]): DataFrame = {
+    val stacked = cols match {
+      case Seq((n, cid)) =>
+        df.select(lit(cid).as("cid"), col(n).cast(DoubleType).as("v"))
+      case _ =>
+        df.select(explode(array(cols.map { case (n, cid) =>
+          struct(lit(cid).as("cid"), col(n).cast(DoubleType).as("v"))
         }: _*)).as("e")).select("e.cid", "e.v")
+    }
     stacked.where(col("v").isNotNull)
   }
 
@@ -405,12 +394,11 @@ object Describe {
   private final case class QRegion(cid: Int, filter: Column, lo: Double,
                                    hi: Double, offset: Long, ranks: Seq[Long])
 
-  /** Core of [[exactQuantiles]]. `base` holds the stacked non-null
-    * `(cid, v)` rows; `cols(cid)` is that column's wanted positions and its
-    * (non-null count, min, max). Returns each column's values at its
-    * positions, in `cols` order.
+  /** Core of [[exactQuantiles]]. Column `names(cid)` of `df` has the
+    * wanted positions and (non-null count, min, max) of `cols(cid)`.
+    * Returns each column's values at its positions, in `cols` order.
     */
-  private def bisect(base: DataFrame,
+  private def bisect(df: DataFrame, names: Seq[String],
                      cols: Seq[(Seq[Double], (Long, Double, Double))])
       : Seq[Seq[Double]] = {
     val B = QuantileBuckets
@@ -472,7 +460,9 @@ object Describe {
       val bk = regions.zip(buckets).foldRight(lit(-1)) {
         case ((reg, b), acc) => when(reg.filter, b).otherwise(acc)
       }
-      val rows = base.where(regions.map(_.filter).reduce(_ || _))
+      val open = regions.map(_.cid).distinct.sorted
+      val rows = stackDoubles(df, open.map(cid => names(cid) -> cid))
+        .where(regions.map(_.filter).reduce(_ || _))
         .groupBy(rid.as("rid"), bk.as("b"))
         .agg(count(lit(1)).as("c"), min(v).as("mn"), max(v).as("mx"))
         .collect()
@@ -508,68 +498,54 @@ object Describe {
     }
   }
 
-  /** Per-column group statistics feeding describe:
+  /** Per-column mode and exact nunique, from ONE stacked aggregation:
     *
     *   - mode per column: `min(struct(-cnt, value))` over the value groups —
-    *     max count with smallest-value tie-break (pandas `mode()[0]`; numeric
-    *     columns tie-break on the numeric value, strings lexicographically);
-    *   - exact nunique: the group count;
-    *   - exact quartiles: delegated to the sort-free histogram walk
-    *     ([[exactQuantiles]]), seeded with the count/min/max this job's own
-    *     agg already produced — zero extra stat scans.
+    *     max count with smallest-value tie-break (pandas `mode()[0]`,
+    *     reference: statistics_utils/_get_mode.py:1-6; `numericCols`
+    *     tie-break on the numeric value, the rest lexicographically);
+    *   - exact nunique: the group count.
     *
-    * ONE stacked aggregation for every column: each input row explodes into
-    * one `(cid, d: double, s: string)` row per column — `d` set for numeric
-    * columns, which never pass through a string cast, `s` for the rest —
-    * grouped per `(cid, value)` and then reduced per `cid`. Every column's
-    * statistics come from one job chain, whatever the table's width.
-    *
-    * `targets` maps numeric columns to fractional order-statistic positions
-    * (p·(n−1)); interpolation matches SQL `percentile`:
-    * v_lo·(⌈pos⌉−pos) + v_hi·(pos−⌊pos⌋).
+    * Each input row explodes into one `(cid, d: double, s: string)` row per
+    * column — `d` set for `numericCols`, which never pass through a string
+    * cast, `s` for the rest — grouped per `(cid, value)` and then reduced
+    * per `cid`. Every column's statistics come from one job chain, whatever
+    * the table's width. A column without a non-null value is absent from
+    * both maps.
     *
     * Numeric envelope: numeric columns group on their DoubleType cast, so
     * integral values beyond 2⁵³ collapse — the SAME float64 envelope as the
-    * pandas reference, whose describe/mode/quantile paths also route int64
-    * through float64 (and as SQL `percentile`, which interpolates in
-    * double).
+    * pandas reference, whose describe/mode paths also route int64 through
+    * float64.
     */
-  def meltStatsFull(df: DataFrame, cols: Seq[String],
-                    targets: Map[String, Seq[Double]],
-                    numericCols: Set[String] = Set.empty)
-      : (Map[String, String], Map[String, Long], Map[String, Seq[Double]]) = {
-    if (cols.isEmpty) return (Map.empty, Map.empty, Map.empty)
-    val numish = cols.filter(n => targets.contains(n) || numericCols.contains(n)).toSet
-    val integral = numish.filter(n => LogicalType.isIntegralType(df.schema(n).dataType))
+  def meltStats(df: DataFrame, cols: Seq[String],
+                numericCols: Set[String] = Set.empty)
+      : (Map[String, String], Map[String, Long]) = {
+    if (cols.isEmpty) return (Map.empty, Map.empty)
+    val integral = numericCols.filter(n =>
+      LogicalType.isIntegralType(df.schema(n).dataType))
     val nullD = lit(null).cast(DoubleType)
     val nullS = lit(null).cast(StringType)
     val stacked = df.select(explode(array(cols.zipWithIndex.map { case (n, i) =>
-      val isNum = numish(n)
+      val isNum = numericCols(n)
       struct(lit(i).as("cid"),
         (if (isNum) col(n).cast(DoubleType) else nullD).as("d"),
         (if (isNum) nullS else col(n).cast(StringType)).as("s"))
     }: _*)).as("e")).select("e.cid", "e.d", "e.s")
       .where(col("d").isNotNull || col("s").isNotNull)
-    // one row per column holding a non-null value: (cid, top, nunique,
-    // non-null count, numeric min, numeric max)
+    // one row per column holding a non-null value: (cid, top, nunique)
     val found = stacked.groupBy("cid", "d", "s").agg(count(lit(1)).as("cnt"))
       .groupBy("cid")
       .agg(min(struct((-col("cnt")).as("negCnt"), col("d"), col("s"))).as("top"),
-        count(lit(1)).as("nu"), sum(col("cnt")).as("nn"),
-        min(col("d")).as("mn"), max(col("d")).as("mx"))
+        count(lit(1)).as("nu"))
       .collect().map(r => cols(r.getInt(0)) -> r).toMap
     val modes = found.map { case (n, r) =>
       val t = r.getStruct(1)
-      n -> (if (!numish(n)) t.getString(2)
+      n -> (if (!numericCols(n)) t.getString(2)
         else if (integral(n)) t.getDouble(1).toLong.toString
         else t.getDouble(1).toString)
     }
-    val quartiles = exactQuantiles(df,
-      targets.filter { case (n, _) => found.contains(n) },
-      found.collect { case (n, r) if targets.contains(n) =>
-        n -> ((r.getLong(3), r.getDouble(4), r.getDouble(5)))
-      })
-    (modes, found.map { case (n, r) => n -> r.getLong(2) }, quartiles)
+    (modes, found.map { case (n, r) => n -> r.getLong(2) })
   }
 
   /** Equal-width histogram of a numeric column in `bins` buckets

@@ -451,7 +451,7 @@ object KeyDiscovery {
     * column pruning makes k narrow scans read the same bytes, and the
     * shuffle key stays narrow instead of a (column, value) pair per row.
     * The 3× loss once measured at sf0.1 for an exploded melt came from a
-    * melt that cast every value to a string; `Describe.meltStatsFull`
+    * melt that cast every value to a string; `Describe.meltStats`
     * stacks typed `(cid, double, string)` rows in one aggregation instead.
     *
     * H = −Σ (c/N)·ln(c/N) = ln N − (Σ c·ln c)/N: the right side is a

@@ -475,7 +475,7 @@ class PropertySpec extends SparkSpec {
 
   test("property: quantile fits equal the sorted-array interpolation reference") {
     // independent reference: sort, pos = p·(n−1), linear interpolation —
-    // pins the shared exactQuantiles/meltStatsFull path (and therefore
+    // pins the shared exactQuantiles walk (and therefore
     // fitRobust/fitWinsor/fitQuantileBins) against a second implementation
     def ref(vals: Seq[Double], p: Double): Double = {
       val s = vals.sorted

@@ -32,7 +32,7 @@ class StatsSpec extends SparkSpec {
     val f = WoodworkFrame.init(Seq(true, true, false).toDF("b"))
     val d = Describe.describe(f).collect().head
     assert(d.getAs[Long]("num_true") == 2 && d.getAs[Long]("num_false") == 1)
-    val modes = Describe.modesFor(Seq("a", "b", "a", "b", "c").toDF("m"), Seq("m"))
+    val (modes, _) = Describe.meltStats(Seq("a", "b", "a", "b", "c").toDF("m"), Seq("m"))
     assert(modes("m") == "a")
   }
 
@@ -146,8 +146,7 @@ class StatsSpec extends SparkSpec {
     // a string column with the same values ties lexicographically → "10"
     val df = Seq(9L, 9L, 10L, 10L).toDF("n")
       .withColumn("s", col("n").cast("string"))
-    val (modes, _, _) = Describe.meltStatsFull(df, Seq("n", "s"),
-      Map.empty, numericCols = Set("n"))
+    val (modes, _) = Describe.meltStats(df, Seq("n", "s"), numericCols = Set("n"))
     assert(modes("n") == "9")
     assert(modes("s") == "10")
   }
