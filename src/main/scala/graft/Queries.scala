@@ -2481,9 +2481,10 @@ object Queries {
     * must hold, the reverse direction customer→orders must report exactly
     * the customers with no orders, and a cross-typed non-FK pair
     * (l_suppkey vs o_orderkey) must count its misses. Every verdict and
-    * count is exact (one full-outer distinct-set join per pair); the HLL
-    * refute screen is spec-covered (KeyDiscoverySpec) since its estimates
-    * are not SQL-reproducible.
+    * count is exact (one value-index plan confirms every pair of a call:
+    * one aggregation by value and one equi-join to the pair table); the
+    * HLL refute screen is spec-covered (KeyDiscoverySpec) since its
+    * estimates are not SQL-reproducible.
     */
   def q147InclusionDeps(s: SparkSession, dir: String): DataFrame = {
     val li = table(s, dir, "lineitem")
@@ -2504,7 +2505,7 @@ object Queries {
 
   /** COMPOSITE inclusion dependencies (r12) — the profiling family's
     * third member at composite arity: tuple containment measured by one
-    * full-outer multi-column equi-join of distinct-tuple sets per pair.
+    * value-index plan per call, keyed on every component.
     * The lattice exercises every verdict shape: a cross-frame arity-2
     * candidate whose truth the data decides ((l_orderkey, l_linestatus)
     * vs (o_orderkey, o_orderstatus) — an order's line statuses need not

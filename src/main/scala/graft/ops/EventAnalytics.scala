@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.util.WorkingSet
 
+import scala.jdk.CollectionConverters._
+
 /** Event-sequence analytics over an (actor, timestamp, event-type) log —
   * the product-analytics family every training-data/event pipeline ends up
   * re-implementing: ordered-funnel conversion (optionally with a
@@ -125,7 +127,7 @@ object EventAnalytics {
         if (first == 0L) 0.0 else n.toDouble / first)
     }
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
+      rows.asJava,
       StructType(Seq(
         StructField("step_index", IntegerType, nullable = false),
         StructField("step", StringType, nullable = false),
@@ -257,7 +259,7 @@ object EventAnalytics {
           q.map(s => java.lang.Double.valueOf(s(1))).orNull)
       }
       spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
+        rows.asJava,
         StructType(Seq(
           StructField("step_index", IntegerType, nullable = false),
           StructField("step", StringType, nullable = false),

@@ -554,7 +554,9 @@ object Ami {
     var denom = meanH - emi
     val eps = 2.220446049250313e-16
     denom = if (denom < 0) math.min(denom, -eps) else math.max(denom, eps)
-    (mi - emi) / denom
+    // identical partitions give mi = meanH up to rounding, which can read
+    // a few ulps above 1: AMI is bounded above by 1
+    math.min(1.0, (mi - emi) / denom)
   }
 
   /** Exact-EMI work cap: the Vinh hypergeometric sum iterates

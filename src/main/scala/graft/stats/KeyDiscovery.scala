@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.util.Concurrency.runConcurrently
 
+import scala.jdk.CollectionConverters._
+
 /** Schema discovery beyond declared typing: candidate-key detection and
   * functional-dependency profiling — the automated version of the
   * uniqueness check the reference runs when an index is DECLARED
@@ -25,8 +27,16 @@ import graft.util.Concurrency.runConcurrently
   * profile follows the same pattern — per-pair jobs measured 2.7×
   * faster than the batched 2k²-group Expand on the q129 shape
   * even though pairs re-read shared columns, because each pair's
-  * map-side partial distinct collapses before the shuffle. Driver state
-  * is candidate-list-sized (k rows / k² pair rows), never data-sized.
+  * map-side partial distinct collapses before the shuffle; one job
+  * per UNORDERED pair reads both directions. Driver state is
+  * candidate-list-sized (k rows / k² pair rows), never data-sized.
+  *
+  * INDs are the exception: a level's confirms share their items (one
+  * column is the left side of many candidates), so every candidate of
+  * a level is confirmed by ONE plan over MIND's value index (see
+  * [[inclusionDependencies]]) — a few Spark jobs per level whatever
+  * the candidate count, where a join per candidate paid about four
+  * each (q152's 60-pair sweep: 247 jobs, now 11).
   *
   * APPROX SCREEN (the 100 TB shape): each exact `count_distinct` shuffles
   * every distinct tuple — for a near-unique candidate that is the whole
@@ -107,9 +117,11 @@ object KeyDiscovery {
   private def schema(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) })
 
+  /** A driver-side verdict table as a local relation: reading it back
+    * runs no Spark job. */
   private def localFrame(spark: SparkSession, rows: Seq[Row],
                          schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Candidate-key profile for the given columns: exact distinct count,
     * null count, and whether the column uniquely identifies rows
@@ -502,9 +514,10 @@ object KeyDiscovery {
     * one non-null `b`, measured as
     * `count(DISTINCT a) = count(DISTINCT a, b)` over rows where both are
     * non-null (Spark's multi-argument distinct count skips any-null rows;
-    * the oracle mirrors it with a filtered struct count). Pairs measure
-    * in concurrent two-column jobs ([[tupleFdAgg]] with a one-column
-    * determinant; see the object doc).
+    * the oracle mirrors it with a filtered struct count). Each
+    * UNORDERED pair `{a, b}` measures both directions in one concurrent
+    * two-column job ([[fdPairAgg]]: the two gated determinant distincts
+    * and the shared pair distinct; see the object doc).
     *
     * `screen = Hll`/`Auto` is the FD analog of the key screen —
     * REFUTE-only:
@@ -540,7 +553,20 @@ object KeyDiscovery {
       s"${cols.size} columns give ${pairs.size} ordered pairs > " +
         s"$MaxCandidates: bound the per-call fan-out — profile in staged " +
         "batches")
-    val rows = pairs.zip(fdProfiles(df, pairs, hll, screenRsd)).map {
+    val profiles =
+      if (hll) fdTuplesScreened(df, pairs, screenRsd)._1
+      else {
+        val unordered = cols.distinct.combinations(2)
+          .map(p => (p(0), p(1))).toSeq
+        val (counts, _) = measure(unordered.size) { i =>
+          fdPairProfile(df, unordered(i)._1, unordered(i)._2) }
+        val byPair = unordered.zip(counts).flatMap {
+          case ((a, b), ((da, db, dp), _)) =>
+            Seq((a, b) -> (da, dp), (b, a) -> (db, dp))
+        }.toMap
+        pairs.map { case (a, b) => (byPair((a.head, b)), true) }
+      }
+    val rows = pairs.zip(profiles).map {
       case ((a, b), ((da, dp), exact)) =>
         Row(a.head, b, da, dp, da == dp, exact)
     }
@@ -557,6 +583,23 @@ object KeyDiscovery {
       hll: Boolean, rsd: Double): Seq[((Long, Long), Boolean)] =
     if (hll) fdTuplesScreened(df, pairs, rsd)._1
     else measure(pairs.size)(i => fdProfile(df, pairs(i)))._1
+
+  /** Both directions of one unordered column pair in one job: the
+    * determinant distinct of each direction (`a` over rows with `b`
+    * non-null, and `b` over rows with `a` non-null — the gate
+    * [[tupleFdAgg]] applies) and the shared pair distinct, so `a → b`
+    * reads (`__da`, `__dp`) and `b → a` reads (`__db`, `__dp`).
+    */
+  private[graft] def fdPairAgg(df: DataFrame, a: String,
+                               b: String): DataFrame =
+    df.agg(
+      count_distinct(when(col(b).isNotNull, col(a))).as("__da"),
+      count_distinct(when(col(a).isNotNull, col(b))).as("__db"),
+      count_distinct(col(a), col(b)).as("__dp"))
+
+  private def fdPairProfile(df: DataFrame, a: String,
+                            b: String): (Long, Long, Long) =
+    longs3(fdPairAgg(df, a, b).head())
 
   /** Refute-only HLL screen for FD measures (scaladoc at
     * [[functionalDependencies]]): each (tuple, dependent) first measures
@@ -1140,13 +1183,15 @@ object KeyDiscovery {
     * 1 and a double 1.0 are different values; both engines' casts agree
     * on integer/string columns, which is what FK discovery runs on).
     *
-    * EXACT path: each pair is ONE narrow concurrent job — the two
-    * single-column distinct-value sets (map-side pre-aggregated, so the
-    * shuffle carries distinct values only) meet in a full-outer join
-    * whose aggregate reads all three counts at once: n_left_distinct,
-    * n_right_distinct, and n_missing (left values with no right match).
-    * `holds` ⟺ n_missing == 0. Never a cartesian shape — the join is an
-    * equi-join on the value itself.
+    * EXACT path: ONE plan confirms every pair of the call
+    * ([[indLevelPlan]], MIND's value index): one aggregation by value
+    * over every named column's non-null values (map-side first, so the
+    * shuffle carries distinct values only) gives each value the set of
+    * columns holding it; joined to the broadcast pair table, each
+    * pair's n_left_distinct, n_right_distinct and matched count are
+    * counts over those sets, so n_missing = n_left − matched.
+    * `holds` ⟺ n_missing == 0. Never a cartesian shape — the one join
+    * is an equi-join on the column.
     *
     * PARTIAL INDs (`minCoverage = θ < 1` — De Marchi et al.'s
     * approximate-IND relaxation, what FK discovery over DIRTY data
@@ -1250,9 +1295,10 @@ object KeyDiscovery {
     * null member violates nothing (SQL MATCH SIMPLE composite-FK rule),
     * a right tuple with any null member matches nothing, and components
     * compare on their STRING cast. The EXACT path needs no tuple
-    * encoding at all — the two distinct-tuple sets (map-side
-    * pre-aggregated) meet in ONE full-outer equi-join on all k
-    * components per pair, so there is no collision question to answer.
+    * encoding at all — every pair of the call, whatever its arity, is
+    * confirmed by the one [[indLevelPlan]], whose value index groups on
+    * all k string components, so there is no collision question to
+    * answer.
     *
     * The SCREENED path sketches each side's tuples as
     * `xxhash64(string-cast components)` ([[indSketchInput]]) — the
@@ -1310,33 +1356,6 @@ object KeyDiscovery {
       "n_left_distinct" -> LongType, "n_right_distinct" -> LongType,
       "n_missing" -> LongType, "coverage" -> DoubleType,
       "holds" -> BooleanType, "is_exact" -> BooleanType))
-  }
-
-  /** One side's distinct non-null tuple values, components string-cast and
-    * positionally renamed `__v0..__v{k-1}` so pair joins are pure
-    * multi-column equi-joins.
-    */
-  private def indTupleValues(df: DataFrame, cs: Seq[String]): DataFrame =
-    df.select(cs.zipWithIndex.map { case (c, i) =>
-        col(c).cast(StringType).as(s"__v$i") }: _*)
-      .where(cs.indices.map(i => col(s"__v$i").isNotNull).reduce(_ && _))
-      .distinct()
-
-  /** One pair's exact confirm: the two distinct-tuple sets (map-side
-    * pre-aggregated, so the shuffle carries distinct tuples only) meet in
-    * a full-outer equi-join on all components; the aggregate reads all
-    * three counts at once. Never a cartesian shape.
-    */
-  private def indConfirm(left: DataFrame, a: Seq[String],
-                         right: DataFrame, b: Seq[String]): (Long, Long, Long) = {
-    val keys = a.indices.map(i => s"__v$i")
-    val r = indTupleValues(left, a).withColumn("__l", lit(1))
-      .join(indTupleValues(right, b).withColumn("__r", lit(1)),
-        keys, "full_outer")
-      .agg(count(col("__l")), count(col("__r")),
-        count(when(col("__l").isNotNull && col("__r").isNull, 1)))
-      .head()
-    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
   /** The tuple encoding the IND screen sketches: `xxhash64` over the
@@ -1438,11 +1457,12 @@ object KeyDiscovery {
     * sketch-only aggregation per table covering all its live tuples (t
     * jobs per level, fixed-size sketches on the wire) — and every
     * candidate verdict comes from a driver-side sketch merge; only
-    * non-refuted candidates pay an exact confirm join, in
-    * [[MaxCandidates]]-bounded concurrent chunks (the per-call budget,
-    * applied per confirm batch — a sweep is never one unbounded job
-    * fan-out). Exact mode confirms every candidate in the same bounded
-    * chunks. Unary verdict semantics are identical to per-call
+    * non-refuted candidates enter the level's exact plan. Exact mode
+    * confirms every candidate of a level in that one plan
+    * ([[indLevelPlan]]: one value → item-set index, one join to the
+    * broadcast candidate table, one count per candidate), so a level
+    * runs a fixed handful of Spark jobs whatever its candidate count.
+    * Unary verdict semantics are identical to per-call
     * [[inclusionDependencies]] results, composite ones to per-call
     * [[compositeInclusionDependencies]] (spec-pinned). Under the screen
     * the lattice walk stays sound: generation uses only
@@ -1565,8 +1585,8 @@ object KeyDiscovery {
   /** Measure one level of IND candidates over `frames` (the sweep's
     * tables, or one call's (left, right) pair): the per-table sketch
     * hoist (one sketch-only aggregation per table covering all its live
-    * tuples), driver-side refutes, exact confirm joins in
-    * [[MaxCandidates]]-bounded concurrent chunks. Returns ((nLeft,
+    * tuples) and driver-side refutes when `hll`, then ONE exact plan for
+    * every surviving candidate ([[indLevelPlan]]). Returns ((nLeft,
     * nRight, nMissing), isExact) per candidate in order.
     */
   private def measureIndLevel(frames: IndexedSeq[DataFrame],
@@ -1589,10 +1609,85 @@ object KeyDiscovery {
             if (ska == null || skb == null) Nil else Seq((i, ska, skb))
           }, rsd, theta)
       }
-    measure(cands.size, screenedOut.get) { i =>
-      val (li, a, ri, b) = cands(i)
-      indConfirm(frames(li), a, frames(ri), b)
-    }._1
+    val survivors = cands.indices.filterNot(screenedOut.contains)
+    val exact: Map[Int, (Long, Long, Long)] =
+      if (survivors.isEmpty) Map.empty
+      else indLevelPlan(frames, survivors.map(cands)).collect().map { r =>
+        survivors(r.getInt(0)) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))
+      }.toMap
+    cands.indices.map(i => screenedOut.get(i) match {
+      case Some(estimates) => (estimates, false)
+      case None =>
+        val (nLeft, nRight, matched) = exact.getOrElse(i, (0L, 0L, 0L))
+        ((nLeft, nRight, nLeft - matched), true)
+    })
+  }
+
+  /** One level's exact IND plan — MIND's value index (De Marchi, Lopes &
+    * Petit 2002): each distinct value with the set of ITEMS — the
+    * (table, tuple) sides the candidates name — that hold it.
+    *
+    * Every item is one scan pruned to its columns, reading its tuples
+    * as string-cast components padded to the level's widest arity with a
+    * constant (a candidate's two items share their arity, so padding
+    * never meets a real component), with only tuples whose every member
+    * is non-null; each row carries its item's bit. The item scans run as
+    * side-by-side tasks of one stage (measured at sf0.1: one scan per
+    * table stacking q149's three lineitem items ran them in one 2.2 s
+    * task, the stage of item scans took 1 s). One aggregation by value
+    * ORs the bits into the item set, map-side first, so the one shuffle
+    * carries each task's distinct values: no more rows than the
+    * distinct-tuple sets one join per pair shuffled. Each value then emits one row per item in its
+    * set (a bit test against each of the level's items), joined to the
+    * broadcast candidate sides on the item, and one aggregation per
+    * candidate counts its left values (n_left), its right values
+    * (n_right) and the left values whose set also holds the right item
+    * (matched). Equi-joins only, never a cartesian shape.
+    *
+    * Returns rows (candidate position, n_left, n_right, matched); a
+    * candidate whose two items are both empty has no row.
+    */
+  private[graft] def indLevelPlan(frames: IndexedSeq[DataFrame],
+      cands: Seq[(Int, Seq[String], Int, Seq[String])]): DataFrame = {
+    val items = cands.flatMap { case (li, a, ri, b) => Seq((li, a), (ri, b)) }
+      .distinct
+    val itemId = items.zipWithIndex.toMap
+    val vs = (0 until items.map(_._2.size).max).map(i => s"__v$i")
+    val words = (items.size + 63) / 64
+    val index = items.zipWithIndex
+      .map { case ((t, cs), id) =>
+        frames(t).select(vs.indices.map { i =>
+          (if (i < cs.size) col(cs(i)).cast(StringType) else lit(""))
+            .as(vs(i)) } ++
+          (0 until words).map { w =>
+            lit(if (w == id / 64) 1L << (id % 64) else 0L).as(s"__m$w") }: _*)
+      }
+      .reduce(_ unionAll _)
+      .where(vs.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(vs.map(col): _*)
+      .agg(array((0 until words).map(w => bit_or(col(s"__m$w"))): _*)
+        .as("__set"))
+    // does this value's item set hold the item at (word, bit)?
+    def inSet(word: Column, bit: Column): Column =
+      (element_at(col("__set"), word + 1) bitwiseAND bit) =!= 0
+    val present = index
+      .select(col("__set"), explode(array(items.indices.map { id =>
+        struct(lit(id).as("__item"), lit(id / 64).as("__w"),
+          lit(1L << (id % 64)).as("__b")) }: _*)).as("__i"))
+      .where(inSet(col("__i.__w"), col("__i.__b")))
+    val sides = localFrame(frames.head.sparkSession,
+      cands.zipWithIndex.flatMap { case ((li, a, ri, b), c) =>
+        val (l, r) = (itemId((li, a)), itemId((ri, b)))
+        Seq(Row(l, c, true, r / 64, 1L << (r % 64)),
+          Row(r, c, false, l / 64, 1L << (l % 64)))
+      },
+      schema("__item" -> IntegerType, "__cand" -> IntegerType,
+        "__left" -> BooleanType, "__ow" -> IntegerType, "__ob" -> LongType))
+    present
+      .join(broadcast(sides), col("__i.__item") === col("__item"))
+      .groupBy("__cand")
+      .agg(count(when(col("__left"), 1)), count(when(!col("__left"), 1)),
+        count(when(col("__left") && inSet(col("__ow"), col("__ob")), 1)))
   }
 
   // --------------------------------------------------- order dependencies

@@ -27,10 +27,12 @@ class KeyDiscoverySpec extends SparkSpec {
   }
 
   test("per-pair FD jobs prune to the pair's two columns") {
-    val scanned = KeyDiscovery.tupleFdAgg(df, Seq("grp"), "grp_val")
-      .queryExecution.optimizedPlan.collectLeaves()
-      .flatMap(_.output).map(_.name).toSet
-    assert(scanned.subsetOf(Set("grp", "grp_val")), s"scanned: $scanned")
+    Seq(KeyDiscovery.tupleFdAgg(df, Seq("grp"), "grp_val"),
+      KeyDiscovery.fdPairAgg(df, "grp", "grp_val")).foreach { agg =>
+      val scanned = agg.queryExecution.optimizedPlan.collectLeaves()
+        .flatMap(_.output).map(_.name).toSet
+      assert(scanned.subsetOf(Set("grp", "grp_val")), s"scanned: $scanned")
+    }
   }
 
   test("per-candidate profile jobs prune to the candidate's columns") {
@@ -353,17 +355,31 @@ class KeyDiscoverySpec extends SparkSpec {
   }
 
   test("inclusionDependencies confirm plan: equi-join on the value, never a cartesian") {
-    // the confirm join is internal; pin its shape by building the same
-    // frame the operator builds
-    val l = Seq(1, 2, 3).toDF("a")
-    val r = Seq(1, 2).toDF("b")
-    val plan = l.select(col("a").cast("string").as("v")).distinct()
-      .withColumn("l", lit(1))
-      .join(r.select(col("b").cast("string").as("v")).distinct()
-        .withColumn("r", lit(1)), Seq("v"), "full_outer")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), plan)
+    // one plan confirms a whole level: its executed joins are equi-joins,
+    // and a sweep's job count does not grow with its candidate count
+    val t1 = spark.range(300).select((0 until 6).map(i =>
+      pmod(col("id"), lit(7 + i)).as(s"a$i")): _*)
+    val t2 = spark.range(40).select((0 until 5).map(i =>
+      (col("id") * (i + 1)).as(s"b$i")): _*)
+    val plan = KeyDiscovery.indLevelPlan(IndexedSeq(t1, t2),
+      Seq((0, Seq("a0"), 1, Seq("b0")), (1, Seq("b1"), 0, Seq("a0"))))
+    plan.collect()
+    val executed = plan.queryExecution.executedPlan.toString
+    assert(executed.contains("isFinalPlan=true"), executed)
+    assert(!executed.contains("CartesianProduct") &&
+      !executed.contains("BroadcastNestedLoopJoin"), executed)
+    val counter = new JobCounter(spark.sparkContext)
+    try {
+      def sweepJobs(leftCols: Int): Int = {
+        val (rows, jobs, _) = counter.count(KeyDiscovery.discoverInds(Seq(
+          ("t1", t1, (0 until leftCols).map(i => s"a$i")),
+          ("t2", t2, (0 until 5).map(i => s"b$i")))).collect())
+        assert(rows.length == 2 * leftCols * 5)
+        jobs
+      }
+      val (jobs10, jobs60) = (sweepJobs(1), sweepJobs(6))
+      assert(jobs10 == jobs60, s"10 pairs: $jobs10 jobs, 60 pairs: $jobs60")
+    } finally counter.close()
   }
 
   test("compositeInclusionDependencies: tuple verdicts, counts, and " +
@@ -401,19 +417,61 @@ class KeyDiscoverySpec extends SparkSpec {
 
   test("compositeInclusionDependencies property: verdicts equal brute-force " +
     "tuple containment") {
+    // one call mixes arities and names items in several candidates, z is
+    // all-null, and the screen and partial coverage take the same inputs;
+    // the sweep over the same tables puts every item on both sides
     val rnd = new scala.util.Random(43)
-    for (trial <- 1 to 5) {
-      val l = Seq.fill(40)((rnd.nextInt(6), rnd.nextInt(4)))
-      val r = Seq.fill(30)((rnd.nextInt(6), rnd.nextInt(4)))
-      val got = KeyDiscovery.compositeInclusionDependencies(
-        l.toDF("a1", "a2"), r.toDF("b1", "b2"),
-        Seq(Seq("a1", "a2") -> Seq("b1", "b2"))).head()
-      val ls = l.toSet
-      val rs = r.toSet
-      assert(got.getLong(3) == ls.size, s"trial $trial")
-      assert(got.getLong(4) == rs.size, s"trial $trial")
-      assert(got.getLong(5) == (ls -- rs).size, s"trial $trial")
-      assert(got.getBoolean(7) == ls.subsetOf(rs), s"trial $trial")
+    def v(n: Int): Option[Int] =
+      if (rnd.nextInt(8) == 0) None else Some(rnd.nextInt(n))
+    val (lCols, rCols) = (Seq("a1", "a2", "z"), Seq("b1", "b2"))
+    val pairs = Seq(Seq("a1", "a2") -> Seq("b1", "b2"), Seq("a1") -> Seq("b1"),
+      Seq("a2") -> Seq("b1"), Seq("a2") -> Seq("b2"), Seq("z") -> Seq("b1"),
+      Seq("a2", "a1") -> Seq("b2", "b1"), Seq("a1", "z") -> Seq("b1", "b2"))
+    for (trial <- 1 to 4) {
+      val l = Seq.fill(40)(Seq(v(6), v(4), None))
+      val r = Seq.fill(30)(Seq(v(6), v(4)))
+      val ldf = l.map(x => (x(0), x(1), x(2))).toDF(lCols: _*)
+      val rdf = r.map(x => (x(0), x(1))).toDF(rCols: _*)
+      val rowsOf = Map("l" -> (l, lCols), "r" -> (r, rCols))
+      def tuples(t: String, cs: Seq[String]): Set[Seq[Option[Int]]] = {
+        val (rows, cols) = rowsOf(t)
+        rows.map(row => cs.map(c => row(cols.indexOf(c))))
+          .filter(_.forall(_.isDefined)).toSet
+      }
+      // (n_left, n_right, n_missing, coverage, holds, is_exact) against
+      // the brute-force sets; a screened row must be truly non-holding
+      def check(got: Seq[Any], lt: String, ls: Seq[String], rt: String,
+                rs: Seq[String], theta: Double): Unit = {
+        val (a, b) = (tuples(lt, ls), tuples(rt, rs))
+        val miss = (a -- b).size
+        val holds = miss <= (1 - theta) * a.size
+        val what = s"trial $trial θ=$theta $lt.$ls ⊆ $rt.$rs: $got"
+        if (got(5) == true) {
+          val cov = if (a.isEmpty) 1.0 else (a.size - miss).toDouble / a.size
+          assert(got == Seq(a.size.toLong, b.size.toLong, miss.toLong, cov,
+            holds, true), what)
+        } else assert(got(4) == false && !holds, what)
+      }
+      for {
+        screen <- Seq(KeyDiscovery.Screen.Exact, KeyDiscovery.Screen.Hll)
+        theta <- Seq(1.0, 0.5)
+      } {
+        val got = KeyDiscovery.compositeInclusionDependencies(ldf, rdf, pairs,
+          screen = screen, minCoverage = theta).collect()
+        assert(got.length == pairs.size)
+        pairs.zip(got).foreach { case ((ls, rs), row) =>
+          check(row.toSeq.drop(3), "l", ls, "r", rs, theta) }
+        val swept = KeyDiscovery.discoverInds(
+          Seq(("l", ldf, lCols), ("r", rdf, rCols)),
+          maxArity = if (theta == 1.0) 2 else 1, screen = screen,
+          minCoverage = theta).collect()
+        assert(swept.count(_.getInt(4) == 1) == 2 * lCols.size * rCols.size)
+        swept.foreach { row =>
+          check(row.toSeq.drop(5), row.getString(0),
+            row.getString(1).split(",").toSeq, row.getString(2),
+            row.getString(3).split(",").toSeq, theta)
+        }
+      }
     }
   }
 
@@ -489,6 +547,31 @@ class KeyDiscoverySpec extends SparkSpec {
           r.getLong(7) == miss && r.getBoolean(9) == holds, s"$key")
       else
         assert(!r.getBoolean(9) && !holds, s"refuted but holds: $key")
+    }
+  }
+
+  test("discoverInds: a level of more than 64 items counts every pair " +
+    "exactly") {
+    // 40 + 30 columns are 70 items: the value index's item sets span two
+    // 64-bit words
+    val t1 = spark.range(60).select((0 until 40).map(i =>
+      pmod(col("id") * (i + 1), lit(11 + i)).as(s"a$i")): _*)
+    val t2 = spark.range(25).select((0 until 30).map(i =>
+      (pmod(col("id"), lit(5 + i)) + i % 3).as(s"b$i")): _*)
+    def sets(df: org.apache.spark.sql.DataFrame): Map[String, Set[Long]] = {
+      val rows = df.collect()
+      df.columns.zipWithIndex.map { case (c, i) =>
+        c -> rows.map(_.getLong(i)).toSet }.toMap
+    }
+    val cols = sets(t1) ++ sets(t2)
+    val swept = KeyDiscovery.discoverInds(Seq(("t1", t1, t1.columns.toSeq),
+      ("t2", t2, t2.columns.toSeq))).collect()
+    assert(swept.length == 2 * 40 * 30)
+    swept.foreach { r =>
+      val (a, b) = (cols(r.getString(1)), cols(r.getString(3)))
+      assert((r.getLong(5), r.getLong(6), r.getLong(7)) ==
+        ((a.size.toLong, b.size.toLong, (a -- b).size.toLong)),
+        r.toString)
     }
   }
 

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc perf probe (not part of the driver contract): times a named query
@@ -24,26 +20,15 @@ object Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    })
-    // the listener bus is asynchronous: wait until the count stops moving
-    def settledJobs(): Int = {
-      var last = -1
-      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(200) }
-      last
-    }
+    val counter = new JobCounter(spark.sparkContext)
     val fn = Queries.all(name)
     for (i <- 1 to 3) {
-      val j0 = settledJobs()
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).collect().length
-      val t = (System.nanoTime() - t0) / 1e9
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-      println(f"[probe] $name run$i rows=$n t=$t%.2fs jobs=${settledJobs() - j0} " +
-        s"compiles=$compiles")
+      val ((n, t), jobs, compiles) = counter.count {
+        val t0 = System.nanoTime()
+        val n = fn(spark, sfDir).collect().length
+        (n, (System.nanoTime() - t0) / 1e9)
+      }
+      println(f"[probe] $name run$i rows=$n t=$t%.2fs jobs=$jobs compiles=$compiles")
     }
     spark.stop()
   }

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.frame.WoodworkFrame
@@ -60,24 +57,10 @@ class ProfilePassSpec extends SparkSpec {
   test("a warm profiling pass pins its job count and its Janino compiles") {
     val dir = Files.createTempDirectory("profile-pass").resolve("long").toString
     val raw = table(dir)
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    // the listener bus is asynchronous: wait until the count stops moving
-    def settled(): Int = {
-      var last = -1
-      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(300) }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val counter = new JobCounter(spark.sparkContext)
     try {
       pass(raw)
-      val jobs0 = settled()
-      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      pass(raw)
-      val warmCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-      val warmJobs = settled() - jobs0
+      val (_, warmJobs, warmCompiles) = counter.count(pass(raw))
       info(s"warm pass: $warmJobs jobs, $warmCompiles compiles")
       // one plan per column, pair and quantile level ran 112 jobs and
       // compiled 278 classes here; the column-batched plans run 64 and
@@ -85,6 +68,6 @@ class ProfilePassSpec extends SparkSpec {
       // reach the cache)
       assert(warmJobs <= 66, s"warm pass ran $warmJobs Spark jobs")
       assert(warmCompiles <= 230, s"warm pass compiled $warmCompiles classes")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally counter.close()
   }
 }

@@ -133,6 +133,19 @@ class StatsSpec extends SparkSpec {
     assert(math.abs(Ami.adjustedMutualInfo(indep) - (-0.0073776845414102)) < 1e-9)
   }
 
+  test("AMI never reads above its bound of 1 on identical partitions") {
+    // a strictly monotone pair's contingency is diagonal: mi and meanH are
+    // equal up to rounding, which once read 1.0000000000000007
+    val over = for {
+      k <- 2 to 60
+      scale <- Seq(1L, 3L, 17L)
+      ami = Ami.adjustedMutualInfo(
+        (0 until k).map(i => (s"a$i", s"x$i", scale * (1 + i % 5))))
+      if ami > 1.0
+    } yield (k, scale, ami)
+    assert(over.isEmpty, over.take(5).mkString(", "))
+  }
+
   test("AMI: one constant column → 0, not 1 (sklearn fall-through)") {
     // only ONE side single-cluster: sklearn computes (0-0)/(meanH) = 0.0
     val oneConst = Seq(("a", "x", 50L), ("a", "y", 50L))
